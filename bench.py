@@ -34,7 +34,7 @@ def build_spark(cpus: int, shuffle: int):
 
     extra = {}
     # Iteration checkpoints are freed explicitly inside the loops
-    # (algos/pagerank._unpersist_rdds), so the ContextCleaner's periodic
+    # (plans/superstep._unpersist_rdds), so the ContextCleaner's periodic
     # GC only reaps superseded broadcast blocks (~100-150 MB per
     # superstep at scale 22) — deferrable for a whole bench run.  A 45s
     # interval was measured to inject concurrent-GC cycles into every

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, Graph
+from ..plans.superstep import vector_side
 
 
 def _symmetrized_edges(g: Graph) -> DataFrame:
@@ -61,12 +62,7 @@ def connected_components(
     n = labels.count()
     # bytes-aware broadcast-or-shuffled-hash switch for the O(n) vector
     # side — policy lives in operators/spmv.vec_join_side
-    from ..operators.spmv import broadcast_nnz_cutoff, vec_join_side
-
-    _cut = broadcast_nnz_cutoff(spark)
-
-    def _vec(df: DataFrame) -> DataFrame:
-        return vec_join_side(df, n, cutoff=_cut)
+    _vec = vector_side(spark, n)
 
     for it in range(max_iter):
         # SpMV over Select2ndMin: min neighbor label per vertex
@@ -125,13 +121,8 @@ def connected_components_as(
         g.vertices().select("v", F.col("v").alias("p")).repartition(g.n_partitions, "v")
     ).cache()
     n = parents.count()
-    from ..operators.spmv import broadcast_nnz_cutoff, vec_join_side
-
-    _cut = broadcast_nnz_cutoff(spark)
-
-    def _vec(df: DataFrame) -> DataFrame:
-        # see operators/spmv.vec_join_side: bytes-aware strategy switch
-        return vec_join_side(df, n, cutoff=_cut)
+    # see operators/spmv.vec_join_side: bytes-aware strategy switch
+    _vec = vector_side(spark, n)
 
     for it in range(max_iter):
         # min neighbor parent per vertex (Select2ndMin SpMV)

@@ -5,18 +5,20 @@ Kleinberg's link-analysis pair to PageRank: per iteration
 each L1-normalized.  Structurally this is two PlusTimes SpMVs per
 iteration — one with the matrix, one with its transpose — i.e. the
 same kernel as algos/pagerank.py (SpParMat::SpMV, SpImpl.h) applied in
-both orientations, so the scale shape is identical: the edge table is
-cached and never shuffles (the vertex vector broadcasts, or falls back
-to the bytes-aware co-partitioned join), and the only wide exchange per
-half-step is the groupBy partial+final aggregate.
+both orientations.  Each half-step is one iteration of the
+plans/superstep.py loop: the state row holds raw sums (both vectors
+after the hub half-step), the half-step's aggregate is the new
+vector's L1 normalizer, and the next half-step divides by it before
+its join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, Graph
+from ..plans import superstep
 
 
 def hits_fixed(
@@ -27,53 +29,10 @@ def hits_fixed(
     """(v, hub, auth) after exactly ``n_iter`` alternating updates,
     each half-step L1-normalized; init hub = 1 per vertex.  Fixed
     iteration count so the DuckDB oracle can unroll the recursion."""
-    from ..operators.spmv import broadcast_nnz_cutoff, vec_join_side
-
     edges = (
         g.edges.select(SRC, DST).distinct().repartition(g.n_partitions, SRC).cache()
     )
-    edges.count()
-    verts = (
-        edges.select(F.col(SRC).alias("v"))
-        .unionByName(edges.select(F.col(DST).alias("v")))
-        .distinct()
-        .repartition(g.n_partitions, "v")
-        .cache()
-    )
-    n = verts.count()
-    _cut = broadcast_nnz_cutoff(spark)
-
-    def _vec(df: DataFrame) -> DataFrame:
-        return vec_join_side(df, n, cutoff=_cut)
-
-    hub = verts.select("v", F.lit(1.0).alias("hub"))
-    auth = None
-    for _ in range(n_iter):
-        araw = (
-            edges.join(_vec(hub), edges[SRC] == hub["v"], "inner")
-            .groupBy(F.col(DST).alias("v"))
-            .agg(F.sum("hub").alias("a"))
-        )
-        asum = araw.agg(F.sum("a")).collect()[0][0]
-        auth = (
-            verts.join(araw, "v", "left")
-            .select("v", (F.coalesce(F.col("a"), F.lit(0.0)) / asum).alias("auth"))
-            .localCheckpoint(eager=True)
-        )
-        hraw = (
-            edges.join(_vec(auth), edges[DST] == auth["v"], "inner")
-            .groupBy(F.col(SRC).alias("v"))
-            .agg(F.sum("auth").alias("h"))
-        )
-        hsum = hraw.agg(F.sum("h")).collect()[0][0]
-        hub = (
-            verts.join(hraw, "v", "left")
-            .select("v", (F.coalesce(F.col("h"), F.lit(0.0)) / hsum).alias("hub"))
-            .localCheckpoint(eager=True)
-        )
-    return hub.join(auth, "v").select(
-        "v", F.round("hub", 6).alias("hub"), F.round("auth", 6).alias("auth")
-    )
+    return _alternate(spark, g, edges, n_iter, F.col("hub"), F.col("auth"))
 
 
 def salsa_fixed(
@@ -92,13 +51,10 @@ def salsa_fixed(
 
     each half-step L1-normalized; init hub = 1 per vertex; exactly
     ``n_iter`` alternating updates so the DuckDB oracle unrolls the
-    recursion.  Same two-SpMV-per-iteration scale shape as hits_fixed —
-    the degree reciprocals are folded into the cached edge table ONCE
-    (one extra pair of O(n)-build joins before the loop), so the loop
-    body is bit-for-bit the HITS superstep.
+    recursion.  The degree reciprocals are folded into the cached edge
+    table ONCE (one extra pair of O(n)-build joins before the loop), so
+    the loop is hits_fixed's with the vote divided by the degree.
     """
-    from ..operators.spmv import broadcast_nnz_cutoff, vec_join_side
-
     dedges = g.edges.select(SRC, DST).distinct()
     odeg = dedges.groupBy(F.col(SRC).alias("v")).agg(F.count("*").alias("od"))
     ideg = dedges.groupBy(F.col(DST).alias("v")).agg(F.count("*").alias("id_"))
@@ -111,6 +67,29 @@ def salsa_fixed(
         .repartition(g.n_partitions, SRC)
         .cache()
     )
+    return _alternate(
+        spark,
+        g,
+        edges,
+        n_iter,
+        F.col("hub") / F.col("od"),
+        F.col("auth") / F.col("id_"),
+    )
+
+
+def _alternate(
+    spark: SparkSession,
+    g: Graph,
+    edges: DataFrame,
+    n_iter: int,
+    auth_vote: Column,
+    hub_vote: Column,
+) -> DataFrame:
+    """``n_iter`` HITS-style iterations over the cached ``edges``: the
+    authority half-step sums ``auth_vote`` (over a ``hub`` column) into
+    each dst, the hub half-step sums ``hub_vote`` (over ``auth``) into
+    each src.  The state row holds the raw sums h and a; the aggregate
+    row's ``hsum``/``asum`` are their L1 normalizers."""
     edges.count()
     verts = (
         edges.select(F.col(SRC).alias("v"))
@@ -120,36 +99,43 @@ def salsa_fixed(
         .cache()
     )
     n = verts.count()
-    _cut = broadcast_nnz_cutoff(spark)
+    vec = superstep.vector_side(spark, n)
 
-    def _vec(df: DataFrame) -> DataFrame:
-        return vec_join_side(df, n, cutoff=_cut)
-
-    hub = verts.select("v", F.lit(1.0).alias("hub"))
-    auth = None
-    for _ in range(n_iter):
-        araw = (
-            edges.join(_vec(hub), edges[SRC] == hub["v"], "inner")
-            .groupBy(F.col(DST).alias("v"))
-            .agg(F.sum(F.col("hub") / F.col("od")).alias("a"))
-        )
-        asum = araw.agg(F.sum("a")).collect()[0][0]
-        auth = (
-            verts.join(araw, "v", "left")
-            .select("v", (F.coalesce(F.col("a"), F.lit(0.0)) / asum).alias("auth"))
-            .localCheckpoint(eager=True)
-        )
-        hraw = (
-            edges.join(_vec(auth), edges[DST] == auth["v"], "inner")
+    def step(s: DataFrame, row: dict, it: int):
+        if it % 2 == 0:
+            # authority half-step; the next (hub) half-step reads only a,
+            # so the new row comes from the cached verts, whose known
+            # layout saves exchanging the state
+            hub = s.select("v", (F.col("h") / row["hsum"]).alias("hub"))
+            raw = (
+                edges.join(vec(hub), edges[SRC] == hub["v"], "inner")
+                .groupBy(F.col(DST).alias("v"))
+                .agg(F.sum(auth_vote).alias("a"))
+            )
+            new = verts.join(raw.hint("shuffle_hash"), "v", "left").select(
+                "v", F.coalesce(F.col("a"), F.lit(0.0)).alias("a")
+            )
+            return new, [F.sum("a").alias("asum"), F.lit(row["hsum"]).alias("hsum")]
+        # hub half-step: a rides along for the result
+        auth = s.select("v", (F.col("a") / row["asum"]).alias("auth"))
+        raw = (
+            edges.join(vec(auth), edges[DST] == auth["v"], "inner")
             .groupBy(F.col(SRC).alias("v"))
-            .agg(F.sum(F.col("auth") / F.col("id_")).alias("h"))
+            .agg(F.sum(hub_vote).alias("h"))
         )
-        hsum = hraw.agg(F.sum("h")).collect()[0][0]
-        hub = (
-            verts.join(hraw, "v", "left")
-            .select("v", (F.coalesce(F.col("h"), F.lit(0.0)) / hsum).alias("hub"))
-            .localCheckpoint(eager=True)
+        new = s.join(raw.hint("shuffle_hash"), "v", "left").select(
+            "v", F.coalesce(F.col("h"), F.lit(0.0)).alias("h"), "a"
         )
-    return hub.join(auth, "v").select(
-        "v", F.round("hub", 6).alias("hub"), F.round("auth", 6).alias("auth")
+        return new, [F.sum("h").alias("hsum"), F.lit(row["asum"]).alias("asum")]
+
+    init = verts.select("v", F.lit(1.0).alias("h"), F.lit(0.0).alias("a"))
+    res = superstep.run(
+        spark, n, init, [F.lit(1.0).alias("hsum")], step, 2 * n_iter
+    )
+    # n == 0: no rows to scale, so no normalizer either
+    hsum, asum = res.row.get("hsum"), res.row.get("asum")
+    return res.state.select(
+        "v",
+        F.round(F.col("h") / F.lit(hsum), 6).alias("hub"),
+        F.round(F.col("a") / F.lit(asum), 6).alias("auth"),
     )

@@ -10,13 +10,9 @@ affine update
     x_{k} = β·1 + α · Aᵀ x_{k-1},   x_0 = β·1,
 
 so after ``n_iter`` steps x = β Σ_{j=0..n_iter} (α Aᵀ)^j 1 — a fixed
-truncation the DuckDB oracle can unroll exactly.
-
-Scale shape is identical to the PageRank superstep: the edge table is
-cached and hash-partitioned once, the vertex vector rides the
-bytes-aware broadcast/co-partitioned switch, and the only wide exchange
-per iteration is the partial+final groupBy aggregate.  Edge
-multiplicity votes through ``w`` exactly like algos/wpagerank.py.
+truncation the DuckDB oracle can unroll exactly.  Each update is one
+iteration of the plans/superstep.py loop, with no scalar to reduce.
+Edge multiplicity votes through ``w`` exactly like algos/wpagerank.py.
 """
 
 from __future__ import annotations
@@ -25,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, W, Graph
+from ..plans import superstep
 
 
 def katz_fixed(
@@ -41,8 +38,6 @@ def katz_fixed(
     default keeps values O(10) on the hub-heavy link graphs the gates
     run on.
     """
-    from ..operators.spmv import broadcast_nnz_cutoff, vec_join_side
-
     edges = g.edges.select(SRC, DST, W).repartition(g.n_partitions, SRC).cache()
     edges.count()
     verts = (
@@ -53,26 +48,22 @@ def katz_fixed(
         .cache()
     )
     n = verts.count()
-    _cut = broadcast_nnz_cutoff(spark)
+    vec = superstep.vector_side(spark, n)
 
-    x = verts.select("v", F.lit(float(beta)).alias("x"))
-    for _ in range(n_iter):
+    def step(x: DataFrame, _row: dict, _it: int):
         contrib = (
-            edges.join(
-                vec_join_side(x, n, cutoff=_cut), edges[SRC] == x["v"], "inner"
-            )
+            edges.join(vec(x), edges[SRC] == x["v"], "inner")
             .groupBy(F.col(DST).alias("v"))
             .agg(F.sum(F.col(W) * F.col("x")).alias("s"))
         )
-        x = (
-            verts.join(contrib, "v", "left")
-            .select(
-                "v",
-                (
-                    F.lit(float(beta))
-                    + F.lit(float(alpha)) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("x"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        return verts.join(contrib.hint("shuffle_hash"), "v", "left").select(
+            "v",
+            (
+                F.lit(float(beta))
+                + F.lit(float(alpha)) * F.coalesce(F.col("s"), F.lit(0.0))
+            ).alias("x"),
+        ), []
+
+    init = verts.select("v", F.lit(float(beta)).alias("x"))
+    x = superstep.run(spark, n, init, [], step, n_iter).state
     return x.select("v", F.round("x", 6).alias("katz"))

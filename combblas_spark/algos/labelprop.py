@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, Graph
+from ..plans.superstep import vector_side
 
 
 def label_propagation(
@@ -53,12 +54,7 @@ def label_propagation(
     n = labels.count()
     # bytes-aware broadcast-or-shuffled-hash switch for the O(n) vector
     # side — policy lives in operators/spmv.vec_join_side
-    from ..operators.spmv import broadcast_nnz_cutoff, vec_join_side
-
-    _cut = broadcast_nnz_cutoff(spark)
-
-    def _vec(df):
-        return vec_join_side(df, n, cutoff=_cut)
+    _vec = vector_side(spark, n)
 
     argmax = Window.partitionBy("v").orderBy(
         F.col("cnt").desc(), F.col("label").asc()

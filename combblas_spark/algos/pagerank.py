@@ -6,7 +6,9 @@ iteration ``pr' = α·(Σ incoming contrib + dangling_mass/n) + (1-α)/n``
 with dangling (no-out-edge) mass allreduced each iteration (:160-201),
 convergence ``max|pr'-pr| < tol``.
 
-Spark formulation, tuned for one-shuffle iterations:
+The iteration loop (one driver action per iteration, lazy checkpoint,
+freed snapshots) is plans/superstep.py.  The step, tuned for
+one-shuffle iterations:
 
 * contrib(v) = rank(v)/outdeg(v) — the DimApply analogue, fused into
   the rank row as a column expression (no extra pass);
@@ -17,10 +19,8 @@ Spark formulation, tuned for one-shuffle iterations:
   aggregation (the reference's MergeContributions);
 * dangling vertices are a **static set** (outdeg == 0 never changes),
   so each iteration needs only their rank sum — folded, together with
-  the convergence delta ``max|pr'-pr|``, into ONE scalar aggregate per
-  iteration: a single driver action materializes the new ranks
-  (localCheckpoint cuts lineage) and a single cheap follow-up job over
-  the checkpointed rows yields (delta, next dangling mass);
+  the convergence delta ``max|pr'-pr|``, into the superstep's one
+  scalar aggregate;
 * at cluster scale the same plan holds: broadcast of an O(n) vector
   (n = vertices ≪ edges for web graphs at fixed memory/executor) or,
   beyond broadcast reach, a co-partitioned shuffle of the small side
@@ -29,63 +29,19 @@ Spark formulation, tuned for one-shuffle iterations:
 
 from __future__ import annotations
 
-import os
-import time as _time
-
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import SRC, DST, Graph
+from ..plans import superstep
 
 #: below this vertex count the rank vector is narrowed to fewer
 #: partitions (driver-job latency dominates); at or above it the vector
 #: keeps the superstep's hash(v, n_partitions) layout so iterations are
 #: exchange-free (see the partition-width comment in pagerank())
 NARROW_VEC_ROWS = 1_000_000
-
-
-def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
-    """Ids of all RDDs currently persisted in the block manager."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keySet().toArray()}
-
-
-def _checkpoint_rdd_id(df: DataFrame) -> int | None:
-    """Id of the RDD backing a localCheckpointed DataFrame.
-
-    ``localCheckpoint`` rewrites the plan to a ``LogicalRDD`` holding the
-    (to-be-)persisted RDD, so the id is known even before a lazy
-    checkpoint materializes.  Returns ``None`` for plans that are not
-    checkpoint-backed (e.g. the durable-snapshot path re-reads parquet).
-    """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith(".LogicalRDD"):
-            return int(plan.rdd().id())
-    except Exception:
-        pass
-    return None
-
-
-def _unpersist_rdds(spark: SparkSession, ids: set[int]) -> None:
-    """Non-blocking unpersist of the given persisted RDD ids.
-
-    Iterative localCheckpoint loops leak superseded checkpoint blocks
-    until a (rare, 48g-heap) JVM GC lets ContextCleaner reap them; on a
-    long run the block-manager pressure degrades later iterations (the
-    round-4 scaling series show 7.4->13.3 s/iter drift within a run).
-    The reference's equivalent is simply freeing the previous iteration's
-    dense vector (pagerank.cpp swaps two preallocated vectors); this is
-    the explicit-free analogue for checkpoint-backed DataFrames.
-    """
-    if not ids:
-        return
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for k in jmap.keySet().toArray():
-        if int(k) in ids:
-            jmap.get(k).unpersist(False)
 
 
 @dataclass
@@ -132,12 +88,6 @@ def pagerank(
     ``checkpointer``: optional plans.checkpoint.Checkpointer — when set,
     each iteration's ranks are snapshotted durably and the run is
     resumable (north-rule).  Without it, localCheckpoint cuts lineage.
-
-    Exactly ONE driver action per iteration on the localCheckpoint
-    path: the new rank vector carries the previous rank as a column, a
-    *lazy* localCheckpoint materializes as a side effect of the fused
-    scalar aggregate (convergence delta + next dangling mass) — there
-    is no separate checkpoint job and no O(n)⋈O(n) delta join.
 
     ``init_ranks``: optional (v, rank) warm start — vertices absent
     from it (a crawl delta's new pages) start at 1/n, then the whole
@@ -242,8 +192,12 @@ def pagerank(
                 vd.count()
                 old_vd.unpersist()
 
+    # dangling mass: the rank on the static outdeg == 0 set
+    dangling = F.sum(F.when(F.col("deg") == 0, F.col("rank"))).alias("dm")
     start_iter = 0
-    ranks = None
+    init_aggs = [dangling]
+    # n == 0 (edgeless graph): the empty vector, no share to compute
+    share = 1.0 / n if n else 0.0
     if checkpointer is not None and checkpointer.latest_iteration() is not None:
         start_iter = checkpointer.latest_iteration() + 1
         ranks = checkpointer.load_latest(spark)
@@ -251,44 +205,34 @@ def pagerank(
             # snapshot written by the pre-(v, deg, rank) format: re-join
             # the static degree column instead of failing on F.col("deg")
             ranks = ranks.join(vd, "v", "inner").select("v", "deg", "rank")
-        dangling = float(
-            ranks.filter(F.col("deg") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
-        )
-    # Only RDD ids this loop itself creates (the per-iteration rank
-    # checkpoints) are ever freed — a global persisted-map diff would
-    # also sweep up RDDs another driver thread persists mid-iteration
-    # (Spark supports concurrent jobs on one session) and truncate THEIR
-    # lineage out from under them.  ``own_ckpt`` holds the live
-    # checkpoint's id; it is superseded when the next one materializes.
-    own_ckpt: set[int] = set()
-    if ranks is None and init_ranks is not None:
+    elif init_ranks is not None:
         # warm start: carry over prior ranks, 1/n for new vertices,
         # re-normalize to total mass 1 (one scalar aggregate)
         r0 = vd.join(
             init_ranks.select("v", F.col("rank").alias("_r0")), "v", "left"
-        ).select("v", "deg", F.coalesce("_r0", F.lit(1.0 / n)).alias("rank"))
+        ).select("v", "deg", F.coalesce("_r0", F.lit(share)).alias("rank"))
         total = float(r0.agg(F.sum("rank")).collect()[0][0])
         ranks = r0.select("v", "deg", (F.col("rank") / total).alias("rank"))
-        ranks = ranks.localCheckpoint(eager=True)
-        own_ckpt = {i for i in (_checkpoint_rdd_id(ranks),) if i is not None}
-        dangling = float(
-            ranks.filter(F.col("deg") == 0).agg(F.sum("rank")).collect()[0][0]
-            or 0.0
-        )
-    elif ranks is None:
-        # init 1/n; ranks carries deg so the iteration needs no extra join
-        ranks = vd.select("v", "deg", F.lit(1.0 / n).alias("rank"))
-        ranks = ranks.localCheckpoint(eager=True)
-        own_ckpt = {i for i in (_checkpoint_rdd_id(ranks),) if i is not None}
-        dangling = ranks.filter(F.col("deg") == 0).count() / n
+    else:
+        # init 1/n; ranks carries deg so the iteration needs no extra join.
+        # Dangling mass (#dangling)/n, not a sum of n-ths: the dense
+        # reference's first-iteration value, bit for bit
+        ranks = vd.select("v", "deg", F.lit(share).alias("rank"))
+        init_aggs = [(F.count(F.when(F.col("deg") == 0, 1)) / n).alias("dm")]
 
-    delta = float("inf")
-    it = start_iter
-    iter_seconds = []
-    loop_t0 = _time.time()
-    while it < max_iter and delta > tol:
-        _it_t0 = _time.time()
-        superseded = own_ckpt
+    # the previous rank rides ALONG in the new row (_prev), so the
+    # superstep's scalar aggregate computes the delta over the fresh
+    # checkpoint alone — no O(n)⋈O(n) delta join.  Fixed-iteration mode
+    # (tol < 0) needs no delta, so it drops the column entirely — a
+    # narrower checkpoint row.
+    prev_in = (F.col("rank").alias("_prev"),) if tol >= 0 else ()
+    prev_out = ("_prev",) if tol >= 0 else ()
+    aggs = [dangling]
+    if tol >= 0:
+        _dexpr = F.sum if norm == "l1" else F.max
+        aggs.append(_dexpr(F.abs(F.col("rank") - F.col("_prev"))).alias("d"))
+
+    def step(ranks: DataFrame, row: dict, _it: int):
         # PlusTimes SpMV: edges ⋈ contrib (broadcast) → groupBy(dst).sum.
         # contrib = rank/deg for non-dangling sources.
         contrib = (
@@ -308,15 +252,7 @@ def pagerank(
             .groupBy(F.col(DST).alias("v"))
             .agg(F.sum(F.col("val")).alias("s"))
         )
-        base = (1.0 - alpha) / n + alpha * dangling / n
-        # the previous rank rides ALONG in the new row (_prev), so the
-        # per-iteration scalar job is a single-table scan of the fresh
-        # checkpoint — no O(n)⋈O(n) delta join (reference allreduce,
-        # pagerank.cpp:160-201, is likewise a fold over the new vector).
-        # Fixed-iteration mode (tol < 0) needs no delta, so it drops the
-        # column entirely — a narrower checkpoint row.
-        prev_in = (F.col("rank").alias("_prev"),) if tol >= 0 else ()
-        prev_out = ("_prev",) if tol >= 0 else ()
+        base = (1.0 - alpha) / n + alpha * (row["dm"] or 0.0) / n
         # On the wide layout both sides of ranks⋈sums are already
         # hash(v, n_partitions) (the checkpoint inherits the previous
         # join's layout; sums inherits the groupBy's), so a shuffled-hash
@@ -367,64 +303,27 @@ def pagerank(
             # A coalesce would be exchange-free but collapses the whole
             # superstep stage's width with it.
             new_ranks = new_ranks.repartition(vec_parts, "v")
-        if checkpointer is not None:
-            # durable path: the scalar job reads the re-loaded snapshot
-            # (_prev rides in the snapshot; resume ignores extra columns)
-            snap = checkpointer.snapshot(
-                new_ranks.select("v", "deg", "rank", *prev_out),
-                it,
-                metrics={"n": n, "m": m},
-            )
-        else:
-            # ONE driver action: the lazy localCheckpoint materializes as
-            # a side effect of the scalar aggregate below
-            snap = new_ranks.localCheckpoint(eager=False)
-        if tol >= 0:
-            _dexpr = F.sum if norm == "l1" else F.max
-            row = snap.agg(
-                _dexpr(F.abs(F.col("rank") - F.col("_prev"))).alias("d"),
-                F.sum(
-                    F.when(F.col("deg") == 0, F.col("rank")).otherwise(F.lit(0.0))
-                ).alias("dm"),
-            ).collect()[0]
-            delta, dangling = float(row["d"]), float(row["dm"] or 0.0)
-        else:
-            # fixed-iteration mode: no convergence check — dangling mass
-            # only, still one single-table action
-            dangling = float(
-                snap.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("deg") == 0, F.col("rank"))), F.lit(0.0)
-                    ).alias("dm")
-                ).collect()[0]["dm"]
-            )
-        # the action above materialized THIS iteration's checkpoint; the
-        # previous loop-created snapshot is now superseded — free its
-        # blocks instead of waiting on a full-GC-triggered cleaner
-        new_ckpt = {i for i in (_checkpoint_rdd_id(snap),) if i is not None}
-        _unpersist_rdds(spark, superseded - new_ckpt)
-        own_ckpt = new_ckpt
-        ranks = snap.select("v", "deg", "rank")
-        it += 1
-        iter_seconds.append(_time.time() - _it_t0)
-        if os.environ.get("PAGERANK_DEBUG_CODEGEN"):
-            jvm = spark._jvm
-            cm = getattr(
-                getattr(jvm.org.apache.spark.metrics.source, "CodegenMetrics$"),
-                "MODULE$",
-            )
-            print(
-                f"[codegen] iter={it} compiles={cm.METRIC_COMPILATION_TIME().getCount()}",
-                flush=True,
-            )
+        return new_ranks, aggs
 
+    res = superstep.run(
+        spark,
+        n,
+        ranks,
+        init_aggs,
+        step,
+        max_iter,
+        until=lambda row: row.get("d", float("inf")) <= tol,
+        checkpointer=checkpointer,
+        start=start_iter,
+        metrics={"n": n, "m": m},
+    )
     return PageRankResult(
-        ranks=ranks.select("v", "rank"),
-        iterations=it,
-        delta=delta,
-        edges_processed=m * it,
-        loop_seconds=_time.time() - loop_t0,
-        iter_seconds=iter_seconds,
+        ranks=res.state.select("v", "rank"),
+        iterations=res.iterations,
+        delta=res.row.get("d", float("inf")),
+        edges_processed=m * res.iterations,
+        loop_seconds=res.loop_seconds,
+        iter_seconds=res.iter_seconds,
     )
 
 

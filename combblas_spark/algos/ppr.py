@@ -7,10 +7,9 @@ semantics) with the uniform teleport replaced by a seed-set indicator:
 
 where t(v) = 1/|S| for seeds S, else 0 — the standard seed-restart
 random walk used for crawl-frontier prioritization and related-page
-retrieval.  The superstep shape is pagerank.py's: cached edges never
-shuffle, the rank vector rides the bytes-aware broadcast/co-partitioned
-join, one groupBy(dst) exchange per iteration; the teleport column is a
-broadcast O(|S|) join, so personalization adds no wide exchange.
+retrieval.  One iteration of the plans/superstep.py loop; the teleport
+is a static column of the vertex table, so personalization adds no
+wide exchange.
 """
 
 from __future__ import annotations
@@ -19,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, Graph
+from ..plans import superstep
 
 
 def ppr_fixed(
@@ -32,8 +32,6 @@ def ppr_fixed(
     init rank = t.  Fixed count so the DuckDB oracle can unroll."""
     if not seeds:
         raise ValueError("seeds must be non-empty")
-    from ..operators.spmv import broadcast_nnz_cutoff, vec_join_side
-
     edges = g.edges.select(SRC, DST).repartition(g.n_partitions, SRC).cache()
     edges.count()
     deg = edges.groupBy(F.col(SRC).alias("v")).agg(F.count("*").alias("deg"))
@@ -57,35 +55,29 @@ def ppr_fixed(
         .cache()
     )
     n = vd.count()
-    _cut = broadcast_nnz_cutoff(spark)
+    vec = superstep.vector_side(spark, n)
+    dangling = F.sum(F.when(F.col("deg") == 0, F.col("rank"))).alias("dm")
 
-    def _vec(df: DataFrame) -> DataFrame:
-        return vec_join_side(df, n, cutoff=_cut)
-
-    ranks = vd.select("v", "deg", "t", F.col("t").alias("rank"))
-    for _ in range(n_iter):
+    def step(ranks: DataFrame, row: dict, _it: int):
         contrib = ranks.filter(F.col("deg") > 0).select(
             "v", (F.col("rank") / F.col("deg")).alias("val")
         )
-        dangling = (
-            ranks.filter(F.col("deg") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
-        )
         sums = (
-            edges.join(_vec(contrib), edges[SRC] == contrib["v"], "inner")
+            edges.join(vec(contrib), edges[SRC] == contrib["v"], "inner")
             .groupBy(F.col(DST).alias("v"))
             .agg(F.sum("val").alias("s"))
         )
-        ranks = (
-            vd.join(sums, "v", "left")
-            .select(
-                "v",
-                "deg",
-                "t",
-                (
-                    (1.0 - alpha) * F.col("t")
-                    + alpha * (F.coalesce(F.col("s"), F.lit(0.0)) + dangling * F.col("t"))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        dm = row["dm"] or 0.0
+        return vd.join(sums.hint("shuffle_hash"), "v", "left").select(
+            "v",
+            "deg",
+            "t",
+            (
+                (1.0 - alpha) * F.col("t")
+                + alpha * (F.coalesce(F.col("s"), F.lit(0.0)) + dm * F.col("t"))
+            ).alias("rank"),
+        ), [dangling]
+
+    init = vd.select("v", "deg", "t", F.col("t").alias("rank"))
+    ranks = superstep.run(spark, n, init, [dangling], step, n_iter).state
     return ranks.select("v", F.round("rank", 6).alias("rank"))

@@ -7,12 +7,10 @@ semantic weights each vote by multiplicity:
 
     pr'(v) = (1-α)/n + α·(Σ_{u→v} pr(u)·w(u,v)/W(u) + dangling/n)
 
-with W(u) = Σ_w out of u.  Same superstep shape as the unweighted
-kernel — cached edges never shuffle, the vertex vector rides the
-bytes-aware broadcast/co-partitioned join, one groupBy(dst) exchange
-per iteration; the only difference is the multiply against the edge's
-weight column inside the join projection (PlusTimes semiring with w as
-the ring element, functions/semiring.py).
+with W(u) = Σ_w out of u.  One iteration of the plans/superstep.py
+loop; the only difference from the unweighted step is the multiply
+against the edge's weight column inside the join projection (PlusTimes
+semiring with w as the ring element, functions/semiring.py).
 """
 
 from __future__ import annotations
@@ -21,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, W, Graph
+from ..plans import superstep
 
 
 def wpagerank_fixed(
@@ -31,8 +30,6 @@ def wpagerank_fixed(
 ) -> DataFrame:
     """(v, rank) after exactly ``n_iter`` weighted iterations, init
     1/n.  Fixed count so the DuckDB oracle can unroll the recursion."""
-    from ..operators.spmv import broadcast_nnz_cutoff, vec_join_side
-
     edges = g.edges.select(SRC, DST, W).repartition(g.n_partitions, SRC).cache()
     edges.count()
     wdeg = edges.groupBy(F.col(SRC).alias("v")).agg(F.sum(W).alias("wdeg"))
@@ -48,32 +45,26 @@ def wpagerank_fixed(
         .cache()
     )
     n = vd.count()
-    _cut = broadcast_nnz_cutoff(spark)
+    vec = superstep.vector_side(spark, n)
+    dangling = F.sum(F.when(F.col("wdeg") == 0, F.col("rank"))).alias("dm")
 
-    def _vec(df: DataFrame) -> DataFrame:
-        return vec_join_side(df, n, cutoff=_cut)
-
-    ranks = vd.select("v", "wdeg", F.lit(1.0 / n).alias("rank"))
-    for _ in range(n_iter):
+    def step(ranks: DataFrame, row: dict, _it: int):
         contrib = ranks.filter(F.col("wdeg") > 0).select(
             "v", (F.col("rank") / F.col("wdeg")).alias("val")
         )
-        dangling = (
-            ranks.filter(F.col("wdeg") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
-        )
         sums = (
-            edges.join(_vec(contrib), edges[SRC] == contrib["v"], "inner")
+            edges.join(vec(contrib), edges[SRC] == contrib["v"], "inner")
             .groupBy(F.col(DST).alias("v"))
             .agg(F.sum(F.col("val") * F.col(W)).alias("s"))
         )
-        base = (1.0 - alpha) / n + alpha * dangling / n
-        ranks = (
-            vd.join(sums, "v", "left")
-            .select(
-                "v",
-                "wdeg",
-                (base + alpha * F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        base = (1.0 - alpha) / n + alpha * (row["dm"] or 0.0) / n
+        return vd.join(sums.hint("shuffle_hash"), "v", "left").select(
+            "v",
+            "wdeg",
+            (base + alpha * F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
+        ), [dangling]
+
+    # n == 0 (edgeless graph): the empty vector, no share to compute
+    init = vd.select("v", "wdeg", F.lit(1.0 / n if n else 0.0).alias("rank"))
+    ranks = superstep.run(spark, n, init, [dangling], step, n_iter).state
     return ranks.select("v", F.round("rank", 6).alias("rank"))

@@ -7,7 +7,11 @@ Mirrors the reference's golden-output comparison strategy
 import numpy as np
 import pytest
 
+from combblas_spark.algos.hits import hits_fixed, salsa_fixed
+from combblas_spark.algos.katz import katz_fixed
 from combblas_spark.algos.pagerank import pagerank, pagerank_fixed
+from combblas_spark.algos.ppr import ppr_fixed
+from combblas_spark.algos.wpagerank import wpagerank_fixed
 from combblas_spark.sources import fixtures as FX
 
 
@@ -164,37 +168,105 @@ def test_pagerank_norm_validation(spark):
         pagerank(spark, g, norm="l2")
 
 
-def test_pagerank_frees_only_its_own_checkpoints(spark):
+#: the superstep kernels, each as (spark, graph, n_iter) -> result rows
+KERNELS = {
+    "pagerank": lambda spark, g, k: pagerank_fixed(spark, g, n_iter=k),
+    "wpagerank": lambda spark, g, k: wpagerank_fixed(spark, g, k),
+    "ppr": lambda spark, g, k: ppr_fixed(spark, g, [0], k),
+    "katz": lambda spark, g, k: katz_fixed(spark, g, k),
+    "hits": lambda spark, g, k: hits_fixed(spark, g, k),
+    "salsa": lambda spark, g, k: salsa_fixed(spark, g, k),
+}
+
+
+def _live_rdd_ids(spark) -> set[int]:
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
+@pytest.mark.parametrize("kernel", sorted(KERNELS))
+def test_pagerank_frees_only_its_own_checkpoints(spark, kernel):
     """The per-iteration checkpoint sweep must not unpersist RDDs OTHER
     code persisted mid-loop (Spark supports concurrent driver jobs on
-    one session): only pagerank's own superseded snapshots are freed."""
-    from combblas_spark.algos.pagerank import _checkpoint_rdd_id
+    one session): only the kernel's own superseded snapshots are freed,
+    so what one call leaves persisted does not grow with iterations."""
+    from combblas_spark.plans.superstep import _checkpoint_rdd_id
 
-    spark.catalog.clearCache()
     # a "foreign" checkpoint, as another driver thread would hold
     foreign = spark.range(100).toDF("v").localCheckpoint(eager=True)
     fid = _checkpoint_rdd_id(foreign)
     assert fid is not None
 
-    def live_ids() -> set[int]:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
+    def left_behind(n_iter: int) -> set[int]:
+        # earlier calls may hold their own checkpoints (clearCache()
+        # only drops catalog-cached plans) — count only what THIS call
+        # adds, which is the property under test
+        spark.catalog.clearCache()
+        before = _live_rdd_ids(spark)
+        KERNELS[kernel](spark, FX.graph(spark, FX.NINE), n_iter).collect()
+        return _live_rdd_ids(spark) - before
 
-    # earlier tests in the session may hold their own checkpoints
-    # (clearCache() only drops catalog-cached plans) — count only what
-    # THIS pagerank call adds, which is the property under test
-    before = live_ids()
-
-    res = pagerank(spark, FX.graph(spark, FX.NINE), tol=1e-6)
-    assert res.iterations > 2
-
-    live = live_ids()
-    # the foreign checkpoint survived the sweep and is still usable
-    assert fid in live
+    one, four = left_behind(1), left_behind(4)
+    # the foreign checkpoint survived the sweeps and is still usable
+    assert fid in _live_rdd_ids(spark)
     assert foreign.count() == 100
-    # superseded rank snapshots were freed: at most the final checkpoint
-    # plus the loop-invariant caches remain, NOT one RDD per iteration
-    assert len(live - before) < res.iterations
+    # superseded snapshots were freed: the final checkpoint plus the
+    # loop-invariant caches remain, NOT one RDD per iteration
+    assert len(four) <= len(one), (one, four)
+
+
+def _jobs_per_call(spark, kernel: str, n_iter: int) -> int:
+    sc = spark.sparkContext
+    group = f"superstep-jobs-{kernel}-{n_iter}"
+    sc.setJobGroup(group, group)
+    try:
+        KERNELS[kernel](spark, FX.graph(spark, FX.NINE), n_iter).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_superstep_jobs_per_iteration(spark):
+    """Every kernel's iteration costs no more Spark jobs than
+    PageRank's (HITS and SALSA: two half-steps, so twice): one driver
+    action per superstep, with the checkpoint materialized under it."""
+    spark.catalog.clearCache()
+    delta = {
+        k: _jobs_per_call(spark, k, 3) - _jobs_per_call(spark, k, 2)
+        for k in KERNELS
+    }
+    for k, d in delta.items():
+        assert d <= delta["pagerank"] * (2 if k in ("hits", "salsa") else 1), delta
+
+
+DEGENERATE = {
+    "empty": [],
+    "self_loop": [(0, 0, 1.0)],
+    "two_self_loops": [(0, 0, 1.0), (1, 1, 1.0)],
+    "star3": FX.star_hub(3),  # every leaf dangling
+}
+
+
+@pytest.mark.parametrize("inp", sorted(DEGENERATE))
+@pytest.mark.parametrize("kernel", sorted(KERNELS))
+def test_degenerate_inputs_are_defined(spark, kernel, inp):
+    """Edgeless, self-loop-only and all-dangling graphs give one finite
+    value per vertex, and the PageRank family keeps rank mass 1."""
+    import math
+
+    triples = DEGENERATE[inp]
+    rows = KERNELS[kernel](spark, FX.graph(spark, triples), 3).collect()
+    verts = {v for s, d, _ in triples for v in (s, d)}
+    assert sorted(r["v"] for r in rows) == sorted(verts)
+    for r in rows:
+        for x in list(r)[1:]:
+            assert x is not None and not math.isnan(x), (kernel, inp, r)
+    if kernel in ("pagerank", "wpagerank", "ppr") and rows:
+        # wpagerank and ppr round each value to 6 places
+        tol = 1e-9 if kernel == "pagerank" else 1e-9 + 5e-7 * len(rows)
+        assert abs(sum(r["rank"] for r in rows) - 1.0) <= tol, rows
 
 
 def test_hits_matches_numpy(spark):
