@@ -7,14 +7,14 @@ like triangle counting, a direct consumer of the masked-SpGEMM pattern
 support as the per-edge triangle count of the SURVIVING subgraph and
 drops edges below k−2.
 
-Scale shape: every round reuses the degree-oriented wedge pipeline of
-algos/triangles.py (shuffle-hash pinned, O(m^1.5) wedge stream only
-ever streamed, never sorted), then one explode+groupBy to credit each
-triangle to its three edges and one semi-join to peel — so a round
-costs one triangle count of the current subgraph, and the subgraph
-only shrinks.  ``rounds`` is FIXED (not run to fixpoint) so the DuckDB
-oracle can unroll the identical peel sequence; past the fixpoint extra
-rounds are idempotent, exactly like the kcore gate's unroll.
+A round orients the surviving canonical edges and closes their wedges
+with the shared pipeline of algos/triangles.py, so it costs one
+triangle count of the current subgraph, and the subgraph only shrinks.
+The rounds run on the superstep loop (plans/superstep.py), which
+checkpoints each round's survivors and frees the superseded ones.
+``rounds`` is FIXED (not run to fixpoint) so the DuckDB oracle can
+unroll the identical peel sequence; past the fixpoint extra rounds are
+idempotent, exactly like the kcore gate's unroll.
 """
 
 from __future__ import annotations
@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, Graph
-from .triangles import triangle_wedges
+from ..plans import superstep
+from .triangles import close_wedges, orient
 
 
 def ktruss_rounds(
@@ -44,34 +45,34 @@ def ktruss_rounds(
         )
         .distinct()
     )
-    for _ in range(rounds):
-        edges = edges.localCheckpoint(eager=True)
-        gg = Graph(
-            edges=edges.select(
-                F.col("u").alias(SRC), F.col("v").alias(DST), F.lit(1.0).alias("w")
-            ),
-            n_partitions=g.n_partitions,
-        )
-        t = triangle_wedges(spark, gg)
+    prev: list[DataFrame] = []  # the live round's oriented-edge cache
+
+    def edge(x: str, y: str):
+        return F.struct(F.least(x, y).alias("u"), F.greatest(x, y).alias("v"))
+
+    def peel(edges: DataFrame, _row: dict, _it: int):
+        # the previous round's oriented edges fed a checkpoint that has
+        # materialized by now
+        for o in prev:
+            o.unpersist()
+        ends = edges.select(F.explode(F.array("u", "v")).alias("v"))
+        deg = ends.groupBy("v").agg(F.count("*").alias("deg"))
+        prev[:] = [orient(edges, deg).cache()]
+        t = close_wedges(prev[0])
         tri_edges = t.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-                    ),
-                    F.struct(
-                        F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v")
-                    ),
-                    F.struct(
-                        F.least("b", "c").alias("u"), F.greatest("b", "c").alias("v")
-                    ),
-                )
-            ).alias("e")
+            F.explode(F.array(edge("a", "b"), edge("a", "c"), edge("b", "c"))).alias("e")
         ).select("e.u", "e.v")
         support = (
             tri_edges.groupBy("u", "v")
             .agg(F.count("*").alias("_sup"))
             .filter(F.col("_sup") >= k - 2)
         )
-        edges = edges.join(support, ["u", "v"], "left_semi")
-    return edges
+        # the peel: support comes out of its groupBy already partitioned
+        # on (u, v), so a pinned hash build re-shuffles only the edges
+        # and sorts neither (sort-merge beyond broadcast reach)
+        return edges.join(support.hint("shuffle_hash"), ["u", "v"], "left_semi"), []
+
+    survivors = superstep.run(spark, None, edges, [], peel, rounds).state
+    for o in prev:
+        o.unpersist()
+    return survivors

@@ -3,7 +3,8 @@
 PageRank, weighted and personalized PageRank, Katz, HITS and SALSA are
 each a semiring SpMV plus element-wise steps and a scalar reduction,
 repeated.  A kernel supplies its starting vector and a ``step``; this
-module owns the loop:
+module owns the loop (the k-truss peel, algos/truss.py, runs on it
+too, with the surviving edges as its state):
 
 * ONE driver action per superstep.  The step's new state row carries
   whatever the next step reads (PageRank's previous rank, HITS's other
@@ -45,7 +46,7 @@ class Supersteps:
 
 def run(
     spark: SparkSession,
-    n: int,
+    n: int | None,
     state: DataFrame,
     aggs: list[Column],
     step: Callable[[DataFrame, dict, int], tuple[DataFrame, list[Column]]],
@@ -69,7 +70,8 @@ def run(
 
     An edgeless graph (``n == 0``) returns ``state`` as it is, after
     zero supersteps: there is nothing to iterate, and the kernels'
-    steps divide by n.
+    steps divide by n.  A step that divides by nothing passes
+    ``n=None`` and always runs.
     """
     if n == 0:
         return Supersteps(state, {}, start)

@@ -7,6 +7,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from combblas_spark.session import get_spark  # noqa: E402
 
+# A 16g driver heap gets the test JVM OOM-killed on small hosts; an
+# explicit setting still wins.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 

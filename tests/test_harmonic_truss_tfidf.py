@@ -153,6 +153,35 @@ def test_ktruss_matches_python_peel(spark):
     )
 
 
+def _live_rdd_ids(spark) -> set[int]:
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
+def test_ktruss_frees_its_round_checkpoints(spark):
+    """Each peel round's checkpoint and oriented-edge cache are freed
+    once superseded, and only those: what one call leaves persisted
+    does not grow with rounds, and a foreign checkpoint survives."""
+    from combblas_spark.algos.truss import ktruss_rounds
+    from combblas_spark.plans.superstep import _checkpoint_rdd_id
+
+    foreign = spark.range(100).toDF("v").localCheckpoint(eager=True)
+    fid = _checkpoint_rdd_id(foreign)
+    assert fid is not None
+
+    def left_behind(rounds: int) -> set[int]:
+        spark.catalog.clearCache()
+        before = _live_rdd_ids(spark)
+        g = FX.graph(spark, FX.NINE)
+        ktruss_rounds(spark, g, k=3, rounds=rounds).collect()
+        return _live_rdd_ids(spark) - before
+
+    one, three = left_behind(1), left_behind(3)
+    assert fid in _live_rdd_ids(spark)
+    assert foreign.count() == 100
+    assert len(three) <= len(one), (one, three)
+
+
 # ---------------------------------------------------------------------------
 # tf-idf
 # ---------------------------------------------------------------------------

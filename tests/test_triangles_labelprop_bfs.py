@@ -198,25 +198,111 @@ def test_single_child_bfs_one_rep_per_parent(spark):
         assert flagged == [min(v for v, _ in vs)], (p, lv)
 
 
+def _executed_plans(spark, run) -> list[str]:
+    """Physical-plan descriptions of the SQL executions ``run()``
+    starts.  An adaptive plan's description carries both its initial
+    (pre-adaptive) and its final plan."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        execs = store.executionsList()
+        return {
+            execs.apply(i).executionId(): execs.apply(i)
+            for i in range(execs.size())
+        }
+
+    before = set(executions())
+    run()
+    # execution events reach the status store asynchronously
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [
+        e.physicalPlanDescription()
+        for i, e in executions().items()
+        if i not in before
+    ]
+
+
 def test_triangle_wedge_joins_never_sort(spark):
     """The scale-curve fix (BASELINE.md round-5): the O(m^1.5) wedge
     stream must stream through shuffled-hash joins — a sort-merge plan
     sorts it, which is what turned the recorded 10x run super-linear.
-    Assert the pinned plan on the pre-adaptive physical plan (AQE may
-    still pick broadcast for tiny inputs at runtime; the pin only has
-    to forbid the sort-merge degradation beyond broadcast reach)."""
-    from combblas_spark.algos.triangles import triangle_wedges
-    from combblas_spark.sources import fixtures as FX
+    Checked on every plan each wedge kernel runs (the k-truss peel
+    runs one per round, behind its checkpoints); AQE may still pick
+    broadcast for tiny inputs at runtime, the pin only has to forbid
+    the sort-merge degradation beyond broadcast reach."""
+    from combblas_spark.algos.triangles import local_clustering, triangle_wedges
+    from combblas_spark.algos.truss import ktruss_rounds
 
     g = FX.graph(spark, FX.NINE)
-    plan = (
-        triangle_wedges(spark, g)
-        ._jdf.queryExecution()
-        .sparkPlan()
-        .toString()
-    )
-    assert "SortMergeJoin" not in plan, plan
-    assert "ShuffledHashJoin" in plan, plan
+    for name, fn in [
+        ("triangle_wedges", lambda: triangle_wedges(spark, g)),
+        ("local_clustering", lambda: local_clustering(spark, g)),
+        ("ktruss_rounds", lambda: ktruss_rounds(spark, g, k=3, rounds=2)),
+    ]:
+        plans = _executed_plans(spark, lambda: fn().collect())
+        assert not any("SortMergeJoin" in p for p in plans), (name, plans)
+        assert any("ShuffledHashJoin" in p for p in plans), (name, plans)
+
+
+DEGENERATE = {
+    "empty": [],
+    "self_loop": [(0, 0, 1.0)],
+    "two_self_loops": [(0, 0, 1.0), (1, 1, 1.0)],
+    "star3": FX.star_hub(3),
+    "dup_antiparallel": [
+        (0, 1, 1.0), (0, 1, 1.0), (1, 0, 1.0), (1, 2, 1.0), (2, 1, 1.0)
+    ],
+    "triangle_self_loop": [(0, 1, 1.0), (1, 2, 1.0), (2, 0, 1.0), (0, 0, 1.0)],
+}
+
+
+@pytest.mark.parametrize("inp", sorted(DEGENERATE))
+def test_wedge_kernels_on_degenerate_inputs(spark, inp):
+    """Edgeless, self-loop-only, triangle-free and multi-edge graphs
+    give defined rows — no exception, null or NaN — from every wedge
+    kernel; duplicates (kept, not summed) and antiparallel edges are
+    one undirected edge."""
+    import math
+
+    from combblas_spark.algos.linkpred import adamic_adar_topk, jaccard_topk
+    from combblas_spark.algos.triangles import local_clustering
+    from combblas_spark.algos.truss import ktruss_rounds
+
+    triples = DEGENERATE[inp]
+    g = FX.graph(spark, triples, sum_duplicates=False)
+    tri = 1 if inp == "triangle_self_loop" else 0
+    assert triangle_count(spark, g) == tri
+    out = {
+        "per_vertex": per_vertex_triangles(spark, g).collect(),
+        "clustering": local_clustering(spark, g).collect(),
+        "ktruss": ktruss_rounds(spark, g, k=3, rounds=2).collect(),
+        "adamic_adar": adamic_adar_topk(spark, g, k=2).collect(),
+        "jaccard": jaccard_topk(spark, g, k=2).collect(),
+    }
+    for name, rows in out.items():
+        for r in rows:
+            for x in r:
+                assert x is not None, (name, inp, r)
+                assert not (isinstance(x, float) and math.isnan(x)), (name, inp, r)
+    assert sum(r["triangles"] for r in out["per_vertex"]) == 3 * tri
+    assert len(out["ktruss"]) == 3 * tri
+    # a vertex carried only by a self-loop has no undirected edge
+    looped_only = {s for s, d, _ in triples if s == d} - {
+        v for s, d, _ in triples if s != d for v in (s, d)
+    }
+    assert not looped_only & {r["v"] for r in out["clustering"]}
+    if inp == "star3":
+        assert sorted(tuple(r) for r in out["clustering"]) == [
+            (v, 0.0) for v in range(4)
+        ]
+        leaf_pairs = [(u, v) for u in (1, 2, 3) for v in (1, 2, 3) if u != v]
+        aa = round(1 / math.log(3), 6)  # the hub's degree is 3
+        assert sorted(tuple(r) for r in out["adamic_adar"]) == [
+            (u, v, aa) for u, v in leaf_pairs
+        ]
+        assert sorted(tuple(r) for r in out["jaccard"]) == [
+            (u, v, 1.0) for u, v in leaf_pairs
+        ]
 
 
 def test_validate_bfs_tree_accepts_real_tree(spark):
