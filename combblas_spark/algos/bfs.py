@@ -5,20 +5,93 @@ Reference: Applications/TopDownBFS.cpp:437-444 —
   fringe = EWiseMult(fringe, parents, exclude=true)   # drop visited
   parents.Set(fringe)
 
-Spark per level: frontier ⋈ edges → groupBy(dst).max(parent-candidate)
-→ anti-join visited → union into parents.  The frontier is small most
-levels → broadcast join (the SpMSpV path, ParFriends.h:2429-2922); the
-direction-optimizing switch (DirOptBFS.cpp:364-365) maps to letting the
-optimizer flip to a shuffle join when the frontier is large.
+Every variant here is that level step on the superstep loop
+(plans/superstep.py, via ``level_sweep``): the state is the visited
+table with a ``level`` per row, the frontier is its last level, and the
+loop stops on the first empty one.  The frontier side of the join
+follows the iterative kernels' broadcast policy
+(operators.spmv.vec_join_side — the SpMSpV path, ParFriends.h:2429-2922).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, Graph
-from ..operators.spmv import BROADCAST_NNZ_CUTOFF
+from ..operators.spmv import broadcast_nnz_cutoff, vec_join_side
+from ..plans import superstep
+
+_ROW = "v long, parent long, level int"
+
+
+def level_sweep(
+    spark: SparkSession,
+    state: DataFrame,
+    step: Callable[[DataFrame, dict, int], DataFrame],
+    max_iter: int,
+    aggs: Callable[[int], list[Column]] = lambda level: [],
+) -> DataFrame:
+    """The visited table after at most ``max_iter`` levels from ``state``
+    (its rows at level 0).  ``step(state, row, it)`` returns the rows of
+    level ``it + 1``; ``row["frontier"]`` is the size of level ``it``,
+    and ``aggs(level)`` adds scalars over the state after each level."""
+
+    def frontier(level: int) -> list[Column]:
+        return [F.count(F.when(F.col("level") == level, 1)).alias("frontier"), *aggs(level)]
+
+    def union(state: DataFrame, row: dict, it: int):
+        return state.unionByName(step(state, row, it)), frontier(it + 1)
+
+    return superstep.run(
+        spark, None, state, frontier(0), union, max_iter,
+        until=lambda row: row["frontier"] == 0,
+    ).state
+
+
+def _pattern(g: Graph, symmetrize: bool) -> DataFrame:
+    """The (src, dst) pattern a traversal walks: A + Aᵀ if ``symmetrize``."""
+    return (g.symmetrize() if symmetrize else g).edges.select(SRC, DST)
+
+
+def _top_down(
+    edges: DataFrame, state: DataFrame, it: int, size: int, cutoff: int, *pick: Column
+) -> DataFrame:
+    """Level ``it + 1``: frontier ⋈ edges, grouped per destination by the
+    ``pick`` aggregates (the parent choice), minus the visited set."""
+    fr = vec_join_side(state.filter(F.col("level") == it).select("v"), size, cutoff=cutoff)
+    return (
+        edges.join(fr, edges[SRC] == fr["v"], "inner")
+        .groupBy(F.col(DST).alias("v"))
+        .agg(*pick)
+        # EWiseMult(..., exclude=true): drop already-visited
+        .join(state.select("v"), "v", "left_anti")
+        .withColumn("level", F.lit(it + 1))
+    )
+
+
+def _bfs(
+    spark: SparkSession,
+    g: Graph,
+    source: int,
+    symmetrize: bool,
+    max_iter: int,
+    parent: Callable[[int], Column],
+) -> DataFrame:
+    """Top-down BFS whose level ``L`` picks ``parent(L)`` per child."""
+    edges = _pattern(g, symmetrize).repartition(g.n_partitions, SRC).cache()
+    cutoff = broadcast_nnz_cutoff(spark)
+
+    def step(state: DataFrame, row: dict, it: int) -> DataFrame:
+        pick = parent(it + 1).alias("parent")
+        return _top_down(edges, state, it, row["frontier"], cutoff, pick)
+
+    start = spark.createDataFrame([(source, source, 0)], schema=_ROW)
+    out = level_sweep(spark, start, step, max_iter)
+    edges.unpersist()
+    return out
 
 
 def bfs(
@@ -34,40 +107,7 @@ def bfs(
     is the max eligible predecessor (SelectMaxSRing) so results are
     deterministic.
     """
-    e = g.edges.select(SRC, DST)
-    if symmetrize:
-        e = e.unionByName(e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST)))
-        e = e.distinct()
-    edges = e.repartition(g.n_partitions, SRC).cache()
-    edges.count()
-
-    parents = spark.createDataFrame(
-        [(source, source, 0)], schema="v long, parent long, level int"
-    )
-    frontier = parents.select("v")
-    frontier_size = 1
-
-    level = 0
-    while frontier_size > 0 and level < max_iter:
-        level += 1
-        fr = F.broadcast(frontier) if frontier_size < BROADCAST_NNZ_CUTOFF else frontier
-        # SelectMax SpMV: candidate parent = max frontier vertex per dst
-        cand = (
-            edges.join(fr, edges[SRC] == fr["v"], "inner")
-            .groupBy(F.col(DST).alias("v"))
-            .agg(F.max(SRC).alias("parent"))
-        )
-        # EWiseMult(..., exclude=true): drop already-visited
-        new = cand.join(parents.select("v"), "v", "left_anti").withColumn(
-            "level", F.lit(level)
-        )
-        new = new.localCheckpoint(eager=True)
-        frontier_size = new.count()
-        if frontier_size == 0:
-            break
-        parents = parents.unionByName(new).localCheckpoint(eager=True)
-        frontier = new.select("v")
-    return parents
+    return _bfs(spark, g, source, symmetrize, max_iter, lambda level: F.max(SRC))
 
 
 def bfs_dir_opt(
@@ -96,80 +136,63 @@ def bfs_dir_opt(
     Switch rule = the reference's cutoffs (DirOptBFS.cpp:363-365,
     388, 409): go bottom-up while scout_count (frontier out-edge sum)
     > m/20 and the frontier is growing; return top-down when
-    fringe_size < n²/(12m) and shrinking.
+    fringe_size < n²/(12m) and shrinking.  Each edge carries its
+    destination's out-degree and each visited row its own, so the
+    scout count is one more scalar of the level's aggregate.
     """
-    e = g.edges.select(SRC, DST)
-    if symmetrize:
-        e = e.unionByName(e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST)))
-        e = e.distinct()
-    edges = e.repartition(g.n_partitions, SRC).cache()
-    m = edges.count()
-    deg = (
-        edges.groupBy(F.col(SRC).alias("v"))
-        .agg(F.count("*").alias("deg"))
-        .repartition(g.n_partitions, "v")
+    e = _pattern(g, symmetrize)
+    deg = e.groupBy(F.col(SRC).alias(DST)).agg(F.count("*").alias("ddeg"))
+    edges = (
+        e.join(deg, DST, "left")
+        .select(SRC, DST, F.coalesce("ddeg", F.lit(0)).alias("ddeg"))
+        .repartition(g.n_partitions, SRC)
         .cache()
     )
-    n = deg.count()
+    m, n, d0 = edges.agg(
+        F.count("*"), F.countDistinct(SRC), F.count(F.when(F.col(SRC) == source, 1))
+    ).collect()[0]
     up_cutoff = m / 20.0
-    down_cutoff = (float(n) * float(n)) / (float(m) * 12.0)
-
-    parents = spark.createDataFrame(
-        [(source, source, 0)], schema="v long, parent long, level int"
-    )
-    frontier = parents.select("v")
-    frontier_size, last_size = 1, 0
+    down_cutoff = float(n) * float(n) / (max(m, 1) * 12.0)
+    cutoff = broadcast_nnz_cutoff(spark)
     bottom_up = False
 
-    level = 0
-    while frontier_size > 0 and level < max_iter:
-        level += 1
+    def step(state: DataFrame, row: dict, it: int) -> DataFrame:
+        nonlocal bottom_up
+        size, last = row["frontier"], row["last"]
         if not bottom_up:
-            scout = (
-                frontier.join(deg, "v", "inner")
-                .agg(F.coalesce(F.sum("deg"), F.lit(0)).alias("s"))
-                .collect()[0]["s"]
-            )
-            if scout > up_cutoff and last_size < frontier_size:
-                bottom_up = True
-        elif frontier_size < down_cutoff and last_size > frontier_size:
+            bottom_up = row["scout"] > up_cutoff and last < size
+        elif size < down_cutoff and last > size:
             bottom_up = False
+        pick = (F.max(SRC).alias("parent"), F.max("ddeg").alias("deg"))
+        if not bottom_up:
+            return _top_down(edges, state, it, size, cutoff, *pick)
+        # prune edges to unvisited destinations FIRST, then a shuffle
+        # join against the (large) frontier — no broadcast
+        unvisited_edges = edges.join(
+            state.select(F.col("v").alias(DST)), DST, "left_anti"
+        )
+        fr = state.filter(F.col("level") == it).select(F.col("v").alias(SRC))
+        return (
+            unvisited_edges.join(fr, SRC, "left_semi")
+            .groupBy(F.col(DST).alias("v"))
+            .agg(*pick)
+            .withColumn("level", F.lit(it + 1))
+        )
 
-        if bottom_up:
-            # prune edges to unvisited destinations FIRST, then a
-            # shuffle join against the (large) frontier — no broadcast
-            unvisited_edges = edges.join(
-                parents.select(F.col("v").alias(DST)), DST, "left_anti"
-            )
-            fr = frontier.select(F.col("v").alias(SRC))
-            new = (
-                unvisited_edges.join(fr, SRC, "left_semi")
-                .groupBy(F.col(DST).alias("v"))
-                .agg(F.max(SRC).alias("parent"))
-                .withColumn("level", F.lit(level))
-            )
-        else:
-            fr = (
-                F.broadcast(frontier)
-                if frontier_size < BROADCAST_NNZ_CUTOFF
-                else frontier
-            )
-            cand = (
-                edges.join(fr, edges[SRC] == fr["v"], "inner")
-                .groupBy(F.col(DST).alias("v"))
-                .agg(F.max(SRC).alias("parent"))
-            )
-            new = cand.join(parents.select("v"), "v", "left_anti").withColumn(
-                "level", F.lit(level)
-            )
-        new = new.localCheckpoint(eager=True)
-        last_size = frontier_size
-        frontier_size = new.count()
-        if frontier_size == 0:
-            break
-        parents = parents.unionByName(new).localCheckpoint(eager=True)
-        frontier = new.select("v")
-    return parents
+    def aggs(level: int) -> list[Column]:
+        return [
+            F.count(F.when(F.col("level") == level - 1, 1)).alias("last"),
+            F.coalesce(
+                F.sum(F.when(F.col("level") == level, F.col("deg"))), F.lit(0)
+            ).alias("scout"),
+        ]
+
+    start = spark.createDataFrame(
+        [(source, source, 0, d0)], schema=_ROW + ", deg long"
+    )
+    out = level_sweep(spark, start, step, max_iter, aggs)
+    edges.unpersist()
+    return out.select("v", "parent", "level")
 
 
 def random_parent_bfs(
@@ -192,44 +215,15 @@ def random_parent_bfs(
     MTRand(1) trick, TopDownBFS.cpp:29).  Level sets are identical to
     ``bfs`` (parent choice never changes reachability), which is the
     cross-path consistency check the tests pin."""
-    e = g.edges.select(SRC, DST)
-    if symmetrize:
-        e = e.unionByName(e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST)))
-        e = e.distinct()
-    edges = e.repartition(g.n_partitions, SRC).cache()
-    edges.count()
 
-    parents = spark.createDataFrame(
-        [(source, source, 0)], schema="v long, parent long, level int"
-    )
-    frontier = parents.select("v")
-    frontier_size = 1
-
-    level = 0
-    while frontier_size > 0 and level < max_iter:
-        level += 1
-        fr = F.broadcast(frontier) if frontier_size < BROADCAST_NNZ_CUTOFF else frontier
+    def parent(level: int) -> Column:
         # SelectRandSRing: min random priority among eligible parents
-        pri = F.xxhash64(
+        return F.min_by(SRC, F.xxhash64(
             F.col(SRC), F.col(DST), F.lit(level).cast("long"),
             F.lit(seed).cast("long"),
-        )
-        cand = (
-            edges.join(fr, edges[SRC] == fr["v"], "inner")
-            .withColumn("_pri", pri)
-            .groupBy(F.col(DST).alias("v"))
-            .agg(F.min_by(SRC, "_pri").alias("parent"))
-        )
-        new = cand.join(parents.select("v"), "v", "left_anti").withColumn(
-            "level", F.lit(level)
-        )
-        new = new.localCheckpoint(eager=True)
-        frontier_size = new.count()
-        if frontier_size == 0:
-            break
-        parents = parents.unionByName(new).localCheckpoint(eager=True)
-        frontier = new.select("v")
-    return parents
+        ))
+
+    return _bfs(spark, g, source, symmetrize, max_iter, parent)
 
 
 def single_child_bfs(
@@ -247,49 +241,17 @@ def single_child_bfs(
     Parent selection matches ``bfs`` (max eligible predecessor); the
     representative per (parent, level) is the min child id (a
     deterministic stand-in for the reference's random reduce — same
-    cardinality, reproducible).  Returns (v, parent, level,
+    cardinality, reproducible).  A parent's children at a level are
+    exactly the tree rows with that (parent, level), so the flags are
+    one aggregate over the finished tree.  Returns (v, parent, level,
     single_child) where exactly one row per (parent, level ≥ 1) has
     ``single_child`` true."""
-    e = g.edges.select(SRC, DST)
-    if symmetrize:
-        e = e.unionByName(e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST)))
-        e = e.distinct()
-    edges = e.repartition(g.n_partitions, SRC).cache()
-    edges.count()
-
-    parents = spark.createDataFrame(
-        [(source, source, 0, True)],
-        schema="v long, parent long, level int, single_child boolean",
+    tree = bfs(spark, g, source, symmetrize, max_iter)
+    # fringe.Uniq: one representative child per parent and level
+    rep = tree.groupBy("parent", "level").agg(F.min("v").alias("_rep"))
+    return tree.join(rep, ["parent", "level"]).select(
+        "v", "parent", "level", (F.col("v") == F.col("_rep")).alias("single_child")
     )
-    frontier = parents.select("v")
-    frontier_size = 1
-
-    level = 0
-    while frontier_size > 0 and level < max_iter:
-        level += 1
-        fr = F.broadcast(frontier) if frontier_size < BROADCAST_NNZ_CUTOFF else frontier
-        cand = (
-            edges.join(fr, edges[SRC] == fr["v"], "inner")
-            .groupBy(F.col(DST).alias("v"))
-            .agg(F.max(SRC).alias("parent"))
-        )
-        new = cand.join(parents.select("v"), "v", "left_anti").withColumn(
-            "level", F.lit(level)
-        )
-        # fringe.Uniq: one representative child per parent this level
-        rep = new.groupBy("parent").agg(F.min("v").alias("_rep"))
-        new = (
-            new.join(rep, "parent")
-            .withColumn("single_child", F.col("v") == F.col("_rep"))
-            .select("v", "parent", "level", "single_child")
-            .localCheckpoint(eager=True)
-        )
-        frontier_size = new.count()
-        if frontier_size == 0:
-            break
-        parents = parents.unionByName(new).localCheckpoint(eager=True)
-        frontier = new.select("v")
-    return parents
 
 
 def validate_bfs_tree(
@@ -308,15 +270,12 @@ def validate_bfs_tree(
     level) table; only the four counters reach the driver.
 
     Returns (n_roots, n_dup, bad_edges, bad_levels) — a valid tree is
-    (1, 0, 0, 0).
+    (1, 0, 0, 0).  Every self-parented row counts as a root, whatever
+    its level, so a second one is caught even away from level 0.
     """
-    e = g.edges.select(SRC, DST)
-    if symmetrize:
-        e = e.unionByName(e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST)))
+    e = _pattern(g, symmetrize)
     tree = tree.cache()
-    n_roots = tree.filter(
-        (F.col("v") == F.col("parent")) & (F.col("level") == 0)
-    ).count()
+    n_roots = tree.filter(F.col("v") == F.col("parent")).count()
     n_dup = tree.count() - tree.select("v").distinct().count()
     nonroot = tree.filter(F.col("v") != F.col("parent"))
     bad_edges = nonroot.join(

@@ -13,22 +13,62 @@ and Aᵀ (the same kernel as TopDownBFS.cpp:437-444 without the parent
 payload); the bowtie is the canonical first analysis a web-crawl link
 graph gets, so it belongs next to PageRank/CC in the engine surface.
 
-Spark shape: each sweep is the bfs.py superstep minus the parent
-aggregate — frontier ⋈ edges (hash-partitioned on src), anti-join the
-visited set, localCheckpoint to cut lineage; the transpose sweep reuses
-the SAME cached edge table with the join key flipped, so the graph is
-scanned once.  Frontiers broadcast under the SpMSpV bytes cutoff
-(ParFriends.h:2429-2922) exactly like BFS/MIS.  At 10^12 documents both
-sweeps are O(diameter) supersteps over an O(m/P)-per-partition join —
-no step materializes anything bigger than the reachable set.
+Both sweeps are one direction-tagged frontier sweep on the superstep
+loop of plans/superstep.py (algos/bfs.level_sweep minus the parent
+payload): a visited row (v, d, level) is forward (d = 0) or backward
+(d = 1), and the backward rows walk the SAME cached edge table with the
+join key flipped, so the graph is scanned once.  At 10^12 documents
+both sweeps are O(diameter) supersteps over an O(m/P)-per-partition
+join — no step materializes anything bigger than the reachable set.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC
+from ..operators.spmv import broadcast_nnz_cutoff, vec_join_side
+from .bfs import level_sweep
+
+
+def _sweep(
+    spark: SparkSession,
+    edges: DataFrame,
+    root: int,
+    dirs: tuple[int, ...],
+    max_iter: int,
+) -> DataFrame:
+    """Visited (v, d, level) of the sweeps from ``root`` in directions
+    ``dirs`` (d = 0 along the edges, d = 1 against them)."""
+    cutoff = broadcast_nnz_cutoff(spark)
+
+    def step(state: DataFrame, row: dict, it: int) -> DataFrame:
+        fr = state.filter(F.col("level") == it)
+        reached = []
+        for d in dirs:
+            key, out = (DST, SRC) if d else (SRC, DST)
+            s = vec_join_side(
+                fr.filter(F.col("d") == d).select("v"), row["frontier"], cutoff=cutoff
+            )
+            reached.append(
+                edges.join(s, edges[key] == s["v"], "inner").select(
+                    F.col(out).alias("v"), F.lit(d).alias("d")
+                )
+            )
+        return (
+            reduce(DataFrame.unionByName, reached)
+            .distinct()
+            .join(state.select("v", "d"), ["v", "d"], "left_anti")
+            .withColumn("level", F.lit(it + 1))
+        )
+
+    start = spark.createDataFrame(
+        [(root, d, 0) for d in dirs], schema="v long, d int, level int"
+    )
+    return level_sweep(spark, start, step, max_iter)
 
 
 def reachable_set(
@@ -41,31 +81,7 @@ def reachable_set(
     """(v) reachable from ``root`` along edge direction (or against it
     when ``reverse``).  ``edges`` must already be cached/partitioned by
     the caller — both bowtie sweeps share one cached table."""
-    from ..operators.spmv import broadcast_nnz_cutoff
-
-    src, dst = (DST, SRC) if reverse else (SRC, DST)
-    cutoff = broadcast_nnz_cutoff(spark)
-
-    visited = spark.createDataFrame([(root,)], schema="v long")
-    frontier = visited
-    frontier_size = 1
-    it = 0
-    while frontier_size > 0 and it < max_iter:
-        it += 1
-        fr = F.broadcast(frontier) if frontier_size < cutoff else frontier
-        new = (
-            edges.join(fr, edges[src] == fr["v"], "inner")
-            .select(F.col(dst).alias("v"))
-            .distinct()
-            .join(visited, "v", "left_anti")
-        )
-        new = new.localCheckpoint(eager=True)
-        frontier_size = new.count()
-        if frontier_size == 0:
-            break
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    return visited
+    return _sweep(spark, edges, root, (int(reverse),), max_iter).select("v")
 
 
 def bowtie_decompose(
@@ -82,54 +98,19 @@ def bowtie_decompose(
     max-out-degree vertex — a giant-SCC member with overwhelming
     probability on a crawl graph, and deterministic).
 
-    Both sweeps run FUSED in one loop — the frontier carries a
-    direction tag, each superstep advances forward and backward rows
-    in a single union job, so the loop runs max(fwd_depth, bwd_depth)
-    driver actions instead of their sum.  Per-iteration driver cost is
-    the scaling bottleneck this engine measures (BASELINE.md, north
-    rule), so halving the round count matters more than the per-round
-    work it adds."""
-    from ..operators.spmv import broadcast_nnz_cutoff
-
+    Both sweeps run FUSED in one loop — each superstep advances forward
+    and backward rows in a single union job, so the loop runs
+    max(fwd_depth, bwd_depth) driver actions instead of their sum.
+    Per-iteration driver cost is the scaling bottleneck this engine
+    measures (BASELINE.md, north rule), so halving the round count
+    matters more than the per-round work it adds."""
     e = (
         edges.select(SRC, DST)
         .distinct()
         .repartition(n_partitions, SRC)
         .cache()
     )
-    e.count()
-    cutoff = broadcast_nnz_cutoff(spark)
-
-    # d = 0: forward sweep (root →), d = 1: backward sweep (→ root)
-    visited = spark.createDataFrame(
-        [(root, 0), (root, 1)], schema="v long, d int"
-    )
-    frontier, frontier_size, it = visited, 2, 0
-    while frontier_size > 0 and it < max_iter:
-        it += 1
-        def _side(d: int) -> DataFrame:
-            s = frontier.filter(F.col("d") == d).select("v")
-            return F.broadcast(s) if frontier_size < cutoff else s
-
-        ff, bf = _side(0), _side(1)
-        fnew = e.join(ff, e[SRC] == ff["v"], "inner").select(
-            F.col(DST).alias("v"), F.lit(0).alias("d")
-        )
-        bnew = e.join(bf, e[DST] == bf["v"], "inner").select(
-            F.col(SRC).alias("v"), F.lit(1).alias("d")
-        )
-        new = (
-            fnew.unionByName(bnew)
-            .distinct()
-            .join(visited, ["v", "d"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        frontier_size = new.count()
-        if frontier_size == 0:
-            break
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-
+    visited = _sweep(spark, e, root, (0, 1), max_iter)
     fwd = visited.filter(F.col("d") == 0).select("v")
     bwd = visited.filter(F.col("d") == 1).select("v")
 

@@ -3,8 +3,10 @@
 PageRank, weighted and personalized PageRank, Katz, HITS and SALSA are
 each a semiring SpMV plus element-wise steps and a scalar reduction,
 repeated.  A kernel supplies its starting vector and a ``step``; this
-module owns the loop (the k-truss peel, algos/truss.py, runs on it
-too, with the surviving edges as its state):
+module owns the loop.  The k-truss peel (algos/truss.py) runs on it
+too, with the surviving edges as its state, and so do the frontier
+kernels — the four BFS variants and the reachability/bowtie sweeps
+(algos/bfs.py, algos/bowtie.py) — with the visited table as theirs:
 
 * ONE driver action per superstep.  The step's new state row carries
   whatever the next step reads (PageRank's previous rank, HITS's other

@@ -347,3 +347,141 @@ def test_validate_bfs_tree_detects_corruption(spark):
     dup = tree.unionByName(tree.limit(1))
     row2 = validate_bfs_tree(spark, g, dup).collect()[0]
     assert row2["n_dup"] == 1
+    # a second self-parented vertex, away from level 0, is a second root
+    selfp = tree.withColumn(
+        "parent",
+        F.when(F.col("v") == vrow["v"], F.col("v")).otherwise(F.col("parent")),
+    )
+    row3 = validate_bfs_tree(spark, g, selfp).collect()[0]
+    assert row3["n_roots"] == 2
+
+
+def _frontier_kernels():
+    from combblas_spark.algos.bfs import (
+        bfs_dir_opt, random_parent_bfs, single_child_bfs,
+    )
+    from combblas_spark.algos.bowtie import bowtie_decompose, reachable_set
+
+    def edges(spark, triples):
+        return FX.edges_df(spark, triples).select("src", "dst")
+
+    def graph_kernel(fn):
+        return lambda spark, t, it: fn(spark, FX.graph(spark, t), 0, max_iter=it)
+
+    return {
+        "bfs": graph_kernel(bfs),
+        "bfs_dir_opt": graph_kernel(bfs_dir_opt),
+        "random_parent_bfs": graph_kernel(random_parent_bfs),
+        "single_child_bfs": graph_kernel(single_child_bfs),
+        # the caller caches the edges reachable_set walks
+        "reachable_set": lambda spark, t, it: reachable_set(
+            spark, edges(spark, t).cache(), 0, max_iter=it
+        ),
+        "bowtie_decompose": lambda spark, t, it: bowtie_decompose(
+            spark, edges(spark, t), 0, n_partitions=4, max_iter=it
+        ),
+    }
+
+
+FRONTIER = _frontier_kernels()
+
+# (v, parent, level) from source 0, and the bowtie regions around it
+FRONTIER_DEGENERATE = {
+    "empty": ([(0, 0, 0)], {}),
+    "self_loop": ([(0, 0, 0)], {0: "CORE"}),
+    "star3": (
+        [(0, 0, 0), (1, 0, 1), (2, 0, 1), (3, 0, 1)],
+        {0: "CORE", 1: "OUT", 2: "OUT", 3: "OUT"},
+    ),
+    "source_absent": ([(0, 0, 0)], {1: "OTHER", 2: "OTHER"}),
+    "two_parts": (
+        [(0, 0, 0), (1, 0, 1)], {0: "CORE", 1: "OUT", 2: "OTHER", 3: "OTHER"}
+    ),
+}
+FRONTIER_INPUTS = {
+    "empty": [],
+    "self_loop": [(0, 0, 1.0)],
+    "star3": FX.star_hub(3),
+    "source_absent": [(1, 2, 1.0)],
+    "two_parts": [(0, 1, 1.0), (2, 3, 1.0)],
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(FRONTIER))
+def test_frontier_kernels_on_degenerate_inputs(spark, kernel):
+    """Edgeless, self-loop, star, source-absent and two-part graphs give
+    the source row and its reach — no exception (bfs_dir_opt used to
+    divide by the edge count)."""
+    for inp, triples in FRONTIER_INPUTS.items():
+        tree, regions = FRONTIER_DEGENERATE[inp]
+        got = sorted(tuple(r) for r in FRONTIER[kernel](spark, triples, 10_000).collect())
+        if kernel == "bowtie_decompose":
+            want = sorted(regions.items())
+        elif kernel == "reachable_set":
+            want = [(v,) for v, _, _ in tree]
+        elif kernel == "single_child_bfs":
+            # the min child per (parent, level) is the representative
+            want = [
+                (v, p, lv, lv == 0 or v == min(
+                    c for c, q, k in tree if (q, k) == (p, lv)
+                ))
+                for v, p, lv in tree
+            ]
+        else:
+            want = tree
+        assert got == want, (kernel, inp)
+
+
+def test_frontier_broadcast_cutoff_is_read_from_conf(spark):
+    """``spark.combblas.broadcast.maxBytes`` = 1 sends every frontier
+    down the shuffled-hash join; the rows do not change."""
+    key = "spark.combblas.broadcast.maxBytes"
+
+    def rows():
+        return [
+            sorted(tuple(r) for r in FRONTIER[k](spark, FX.NINE, 10_000).collect())
+            for k in ("bfs", "bowtie_decompose")
+        ]
+
+    default = rows()
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "1")
+    try:
+        shuffled = rows()
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+    assert shuffled == default
+
+
+def _live_rdd_ids(spark) -> set[int]:
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
+@pytest.mark.parametrize("kernel", sorted(FRONTIER))
+def test_frontier_level_cost_and_checkpoints(spark, kernel):
+    """One level is one superstep: at most two SQL executions (the lazy
+    checkpoint and the aggregate that materializes it), superseded
+    level checkpoints are freed, and a foreign checkpoint survives."""
+    from combblas_spark.plans.superstep import _checkpoint_rdd_id
+
+    foreign = spark.range(100).toDF("v").localCheckpoint(eager=True)
+    fid = _checkpoint_rdd_id(foreign)
+    assert fid is not None
+
+    def call(levels: int) -> tuple[int, set[int]]:
+        spark.catalog.clearCache()
+        before = _live_rdd_ids(spark)
+        plans = _executed_plans(
+            spark, lambda: FRONTIER[kernel](spark, FX.chain(16), levels).collect()
+        )
+        return len(plans), _live_rdd_ids(spark) - before
+
+    (ex2, left2), (ex4, left4) = call(2), call(4)
+    assert (ex4 - ex2) / 2 <= 2, (ex2, ex4)
+    assert len(left4) <= len(left2), (left2, left4)
+    assert fid in _live_rdd_ids(spark)
+    assert foreign.count() == 100
