@@ -12,27 +12,101 @@ Shortcut :1321).  We implement FastSV-style min-label propagation with
 pointer-jumping as the primary (BSP-friendliest) variant and a
 hooking-on-stars variant for parity.
 
-Spark formulation per iteration: one SpMV join (edges ⋈ labels →
-groupBy.min — the Select2ndMinSR semiring, CC.h:62-84), one
-pointer-jump self-join, one scalar agg for convergence.  Labels
-converge to the **minimum vertex id of the component** — the
-normalization the tests use (SURVEY.md §7c).
+Both are a hook step on the superstep loop (plans/superstep.py): one
+SpMV join (edges ⋈ labels → groupBy.min — the Select2ndMinSR semiring,
+CC.h:62-84), the hook, pointer-jump self-joins, and the count of
+changed labels in the loop's one aggregate (each row carries its
+previous label as ``old``).  Labels converge to the **minimum vertex id
+of the component** — the normalization the tests use (SURVEY.md §7c).
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, Graph
-from ..plans.superstep import vector_side
+from ..plans import superstep
+
+Vec = Callable[[DataFrame], DataFrame]
 
 
-def _symmetrized_edges(g: Graph) -> DataFrame:
-    e = g.edges.select(SRC, DST)
-    return e.unionByName(
-        e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
-    ).distinct()
+def _label_sweep(
+    spark: SparkSession,
+    g: Graph,
+    hook: Callable[[DataFrame, DataFrame, Vec], DataFrame],
+    max_iter: int,
+    checkpointer=None,
+) -> DataFrame:
+    """(v, comp) from comp = v, iterating ``hook(edges, labels, vec)``
+    — which returns (v, comp, old) — until no label changes."""
+    edges = g.symmetrize().edges.select(SRC, DST).repartition(g.n_partitions, SRC).cache()
+    # symmetrized ⇒ every vertex appears as src: the label init reads
+    # the CACHED edges, not the upstream plan (maybe a whole pipeline)
+    start = (
+        edges.select(F.col(SRC).alias("v")).distinct()
+        .select("v", F.col("v").alias("comp"))
+        .repartition(g.n_partitions, "v")
+    )
+
+    def step(state: DataFrame, row: dict, _it: int):
+        vec = superstep.vector_side(spark, row["rows"])
+        new = hook(edges, state.select("v", "comp"), vec)
+        return new.repartition(g.n_partitions, "v"), [
+            F.count(F.when(F.col("comp") != F.col("old"), 1)).alias("changed")
+        ]
+
+    res = superstep.run(
+        spark, None, start, [], step, max_iter,
+        until=lambda row: row["rows"] == 0 or row.get("changed") == 0,
+        checkpointer=checkpointer,
+    )
+    edges.unpersist()
+    return res.state.select("v", "comp")
+
+
+def _nbr_min(edges: DataFrame, labels: DataFrame, vec: Vec) -> DataFrame:
+    """SpMV over Select2ndMin: (v, nmin) = min neighbor label per vertex."""
+    return (
+        edges.join(vec(labels), edges[SRC] == labels["v"], "inner")
+        .groupBy(F.col(DST).alias("v"))
+        .agg(F.min("comp").alias("nmin"))
+    )
+
+
+def _jump(df: DataFrame, vec: Vec) -> DataFrame:
+    """Pointer jump comp = comp[comp] (Shortcut, CC.h:1321-1341 /
+    FullyDistVec subsref gather, FullyDistVec.cpp:933)."""
+    l2 = df.select(F.col("v").alias("p"), F.col("comp").alias("pcomp"))
+    return (
+        df.join(vec(l2), df["comp"] == l2["p"], "left")
+        .select("v", F.coalesce(F.col("pcomp"), F.col("comp")).alias("comp"), "old")
+    )
+
+
+def _fastsv_hook(edges: DataFrame, labels: DataFrame, vec: Vec) -> DataFrame:
+    hooked = labels.join(_nbr_min(edges, labels, vec), "v", "left").select(
+        "v", F.least("comp", "nmin").alias("comp"), F.col("comp").alias("old")
+    )
+    return _jump(hooked, vec)
+
+
+def _as_hook(edges: DataFrame, labels: DataFrame, vec: Vec) -> DataFrame:
+    # conditional hook: a root hooks onto the smallest neighbor parent
+    # seen by any of its children or itself, if smaller.
+    cand = (
+        labels.join(_nbr_min(edges, labels, vec), "v", "left")
+        .groupBy(F.col("comp").alias("root"))
+        .agg(F.min(F.coalesce("nmin", "comp")).alias("newp"))
+        .filter(F.col("newp") < F.col("root"))
+    )
+    hooked = labels.join(vec(cand), labels["comp"] == cand["root"], "left").select(
+        "v", F.coalesce("newp", "comp").alias("comp"), F.col("comp").alias("old")
+    )
+    # shortcut to fixpoint-ish: two pointer jumps per superstep
+    return _jump(_jump(hooked, vec), vec)
 
 
 def connected_components(
@@ -45,62 +119,10 @@ def connected_components(
 
     FastSV-style: alternate min-neighbor-label propagation with
     pointer jumping (label[label]) so chains converge in O(log n)
-    supersteps (the chain_1k fixture is the worst case).
+    supersteps (the chain_1k fixture is the worst case).  With a
+    ``checkpointer`` every superstep's labels are snapshotted durably.
     """
-    edges = _symmetrized_edges(g).repartition(g.n_partitions, SRC).cache()
-    edges.count()
-    # symmetrized ⇒ every vertex appears as src: derive the label init
-    # from the CACHED edges, not the upstream plan (which could be a
-    # whole extraction pipeline re-executed)
-    labels = (
-        edges.select(F.col(SRC).alias("v"))
-        .distinct()
-        .select("v", F.col("v").alias("comp"))
-        .repartition(g.n_partitions, "v")
-        .cache()
-    )
-    n = labels.count()
-    # bytes-aware broadcast-or-shuffled-hash switch for the O(n) vector
-    # side — policy lives in operators/spmv.vec_join_side
-    _vec = vector_side(spark, n)
-
-    for it in range(max_iter):
-        # SpMV over Select2ndMin: min neighbor label per vertex
-        nbr_min = (
-            edges.join(_vec(labels), edges[SRC] == labels["v"], "inner")
-            .groupBy(F.col(DST).alias("v"))
-            .agg(F.min("comp").alias("nmin"))
-        )
-        hooked = (
-            labels.join(nbr_min, "v", "left")
-            .select(
-                "v",
-                F.least(F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))).alias(
-                    "comp"
-                ),
-            )
-        )
-        # pointer jump: comp = comp[comp] (Shortcut, CC.h:1321-1341 /
-        # FullyDistVec subsref gather, FullyDistVec.cpp:933)
-        l2 = hooked.select(F.col("v").alias("p"), F.col("comp").alias("pcomp"))
-        jumped = (
-            hooked.join(_vec(l2), hooked["comp"] == l2["p"], "left")
-            .select("v", F.coalesce(F.col("pcomp"), F.col("comp")).alias("comp"))
-            .repartition(g.n_partitions, "v")
-        )
-        jumped = jumped.localCheckpoint(eager=True)
-        changed = (
-            jumped.join(_vec(labels.withColumnRenamed("comp", "old")), "v")
-            .filter(F.col("comp") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        labels = jumped
-        if checkpointer is not None:
-            labels = checkpointer.snapshot(labels, it, metrics={"changed": changed})
-        if changed == 0:
-            break
-    return labels
+    return _label_sweep(spark, g, _fastsv_hook, max_iter, checkpointer)
 
 
 def connected_components_as(
@@ -116,52 +138,7 @@ def connected_components_as(
     :func:`connected_components`; kept as the cross-path consistency
     check (SURVEY.md §5 — same result from independent code paths).
     """
-    edges = _symmetrized_edges(g).repartition(g.n_partitions, SRC).cache()
-    parents = (
-        g.vertices().select("v", F.col("v").alias("p")).repartition(g.n_partitions, "v")
-    ).cache()
-    n = parents.count()
-    # see operators/spmv.vec_join_side: bytes-aware strategy switch
-    _vec = vector_side(spark, n)
-
-    for it in range(max_iter):
-        # min neighbor parent per vertex (Select2ndMin SpMV)
-        nbr = (
-            edges.join(_vec(parents), edges[SRC] == parents["v"], "inner")
-            .groupBy(F.col(DST).alias("v"))
-            .agg(F.min("p").alias("minp"))
-        )
-        # conditional hook: a root hooks onto the smallest neighbor parent
-        # seen by any of its children or itself, if smaller.
-        cand = (
-            parents.join(nbr, "v", "left")
-            .select("v", "p", F.coalesce(F.col("minp"), F.col("p")).alias("minp"))
-            .groupBy(F.col("p").alias("root"))
-            .agg(F.min("minp").alias("newp"))
-            .filter(F.col("newp") < F.col("root"))
-        )
-        hooked = (
-            parents.join(_vec(cand), parents["p"] == cand["root"], "left")
-            .select("v", F.coalesce(F.col("newp"), F.col("p")).alias("p"))
-        )
-        # shortcut to fixpoint-ish: two pointer jumps per superstep
-        for _ in range(2):
-            l2 = hooked.select(F.col("v").alias("q"), F.col("p").alias("qp"))
-            hooked = (
-                hooked.join(_vec(l2), hooked["p"] == l2["q"], "left")
-                .select("v", F.coalesce(F.col("qp"), F.col("p")).alias("p"))
-            )
-        hooked = hooked.repartition(g.n_partitions, "v").localCheckpoint(eager=True)
-        changed = (
-            hooked.join(_vec(parents.withColumnRenamed("p", "old")), "v")
-            .filter(F.col("p") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        parents = hooked
-        if changed == 0:
-            break
-    return parents.select("v", F.col("p").alias("comp"))
+    return _label_sweep(spark, g, _as_hook, max_iter)
 
 
 def component_sizes(labels: DataFrame) -> DataFrame:

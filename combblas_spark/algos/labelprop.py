@@ -9,6 +9,7 @@ The argmax-over-counts "semiring" is not a Column-pair algebra; it
 compiles to **two-level aggregation**: groupBy(dst, label).count() then
 a per-dst argmax window (row_number ordered by count desc, label asc).
 This is SURVEY.md §2.7's "argmax semiring = two-level aggregation".
+Each round is one step on the superstep loop (plans/superstep.py).
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, Graph
-from ..plans.superstep import vector_side
+from ..plans import superstep
 
 
 def label_propagation(
@@ -31,37 +32,28 @@ def label_propagation(
     Deterministic: ties on count break to the smaller label, and a
     vertex keeps its label only when it has no neighbors.
     """
-    e = g.edges.select(SRC, DST)
-    if symmetrize:
-        e = e.unionByName(e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST)))
-        e = e.distinct()
-    edges = e.repartition(g.n_partitions, SRC).cache()
-    edges.count()
-
-    # init from the CACHED edge table (not the upstream plan); with
-    # symmetrize every vertex appears as src, otherwise union both ends
-    if symmetrize:
-        vs = edges.select(F.col(SRC).alias("v"))
-    else:
-        vs = edges.select(F.col(SRC).alias("v")).unionByName(
-            edges.select(F.col(DST).alias("v"))
-        )
-    labels = (
-        vs.distinct().select("v", F.col("v").alias("label"))
-        .repartition(g.n_partitions, "v")
+    edges = (
+        (g.symmetrize() if symmetrize else g).edges.select(SRC, DST)
+        .repartition(g.n_partitions, SRC)
         .cache()
     )
-    n = labels.count()
-    # bytes-aware broadcast-or-shuffled-hash switch for the O(n) vector
-    # side — policy lives in operators/spmv.vec_join_side
-    _vec = vector_side(spark, n)
-
+    # init from the CACHED edge table (not the upstream plan); with
+    # symmetrize every vertex appears as src, otherwise union both ends
+    vs = edges.select(F.col(SRC).alias("v"))
+    if not symmetrize:
+        vs = vs.unionByName(edges.select(F.col(DST).alias("v")))
+    start = (
+        vs.distinct().select("v", F.col("v").alias("label"))
+        .repartition(g.n_partitions, "v")
+    )
     argmax = Window.partitionBy("v").orderBy(
         F.col("cnt").desc(), F.col("label").asc()
     )
-    for _ in range(n_iter):
+
+    def step(labels: DataFrame, row: dict, _it: int):
+        vec = superstep.vector_side(spark, row["rows"])
         counted = (
-            edges.join(_vec(labels), edges[SRC] == labels["v"], "inner")
+            edges.join(vec(labels), edges[SRC] == labels["v"], "inner")
             .groupBy(F.col(DST).alias("v"), F.col("label"))
             .agg(F.count("*").alias("cnt"))
         )
@@ -70,10 +62,15 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select("v", F.col("label").alias("new_label"))
         )
-        labels = (
-            labels.join(_vec(top), "v", "left")
+        new = (
+            labels.join(vec(top), "v", "left")
             .select("v", F.coalesce(F.col("new_label"), F.col("label")).alias("label"))
             .repartition(g.n_partitions, "v")
-            .localCheckpoint(eager=True)
         )
-    return labels
+        return new, []
+
+    res = superstep.run(
+        spark, None, start, [], step, n_iter, until=lambda row: row["rows"] == 0
+    )
+    edges.unpersist()
+    return res.state

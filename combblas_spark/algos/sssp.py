@@ -6,8 +6,11 @@ saturating inf_plus at :40-47) — per round (Bellman-Ford superstep):
     dist' = min(dist, min over incoming edges (dist[src] + w))
 
 Spark: one co-partitioned join + groupBy(dst).min per round, then an
-element-wise min merge (vec EWiseApply).  Converges in at most
-diameter rounds; ``n_rounds`` fixed for the oracle-gate variant.
+element-wise min merge (vec EWiseApply) — one relax step on the
+superstep loop (plans/superstep.py).  Each row carries its previous
+distance as ``old``, so the count of improved rows rides in the loop's
+one aggregate and the loop stops at the fixpoint: at most diameter
+rounds.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ from pyspark.sql import functions as F
 from ..functions.semiring import MIN_PLUS
 from ..graph import Graph
 from ..operators.spmv import spmv
+from ..plans import superstep
 
 
 def sssp_rounds(
@@ -26,28 +30,14 @@ def sssp_rounds(
     source: int,
     n_rounds: int,
 ) -> DataFrame:
-    """(v, dist) after exactly ``n_rounds`` Bellman-Ford supersteps.
+    """(v, dist) after ``n_rounds`` Bellman-Ford supersteps (fewer when
+    the distances reach their fixpoint sooner: more rounds would not
+    change them).
 
     Only reached vertices appear (sparse frontier semantics, matching
     FullyDistSpVec); unreached = +inf = absent.
     """
-    edges = g.edges.repartition(g.n_partitions, "src").cache()
-    dist = spark.createDataFrame([(source, 0.0)], "v long, val double")
-    for _ in range(n_rounds):
-        relaxed = spmv(Graph(edges, g.n_partitions), dist, MIN_PLUS)
-        dist = (
-            dist.withColumnRenamed("val", "d0")
-            .join(relaxed.withColumnRenamed("val", "d1"), "v", "full")
-            .select(
-                "v",
-                F.least(
-                    F.coalesce("d0", F.lit(float("inf"))),
-                    F.coalesce("d1", F.lit(float("inf"))),
-                ).alias("val"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return dist.select("v", F.col("val").alias("dist"))
+    return sssp(spark, g, source, max_rounds=n_rounds)
 
 
 def sssp(
@@ -57,30 +47,22 @@ def sssp(
     max_rounds: int = 10_000,
 ) -> DataFrame:
     """Run to fixpoint (no distance change) — full Bellman-Ford."""
-    edges = g.edges.repartition(g.n_partitions, "src").cache()
-    dist = spark.createDataFrame([(source, 0.0)], "v long, val double")
-    for _ in range(max_rounds):
-        relaxed = spmv(Graph(edges, g.n_partitions), dist, MIN_PLUS)
-        new = (
-            dist.withColumnRenamed("val", "d0")
-            .join(relaxed.withColumnRenamed("val", "d1"), "v", "full")
-            .select(
-                "v",
-                F.least(
-                    F.coalesce("d0", F.lit(float("inf"))),
-                    F.coalesce("d1", F.lit(float("inf"))),
-                ).alias("val"),
-            )
-            .localCheckpoint(eager=True)
+    edges = Graph(g.edges.repartition(g.n_partitions, "src").cache(), g.n_partitions)
+
+    def step(state: DataFrame, _row: dict, _it: int):
+        dist = state.select("v", F.col("val").alias("old"))
+        relaxed = spmv(edges, state.select("v", "val"), MIN_PLUS)
+        # least() skips nulls: an unreached side is +inf
+        new = dist.join(relaxed, "v", "full").select(
+            "v", F.least("old", "val").alias("val"), "old"
         )
-        changed = (
-            new.join(dist.withColumnRenamed("val", "old"), "v", "left")
-            .filter(
-                F.col("old").isNull() | (F.col("val") < F.col("old"))
-            )
-            .count()
-        )
-        dist = new
-        if changed == 0:
-            break
-    return dist.select("v", F.col("val").alias("dist"))
+        changed = F.col("old").isNull() | (F.col("val") < F.col("old"))
+        return new, [F.count(F.when(changed, 1)).alias("changed")]
+
+    start = spark.createDataFrame([(source, 0.0)], "v long, val double")
+    res = superstep.run(
+        spark, None, start, [], step, max_rounds,
+        until=lambda row: row.get("changed") == 0,
+    )
+    edges.edges.unpersist()
+    return res.state.select("v", F.col("val").alias("dist"))

@@ -37,18 +37,6 @@ def subsref(g: Graph, rows: DataFrame, cols: DataFrame | None = None) -> Graph:
     return replace(g, edges=out)
 
 
-def subsref_keep(g: Graph, rows: DataFrame, cols: DataFrame | None = None) -> Graph:
-    """A(ri,ci) without relabeling (semi-join filter only)."""
-    if cols is None:
-        cols = rows
-    out = (
-        g.edges.join(rows.select(F.col("v").alias(SRC)), SRC, "left_semi")
-        .join(cols.select(F.col("v").alias(DST)), DST, "left_semi")
-        .select(SRC, DST, W)
-    )
-    return replace(g, edges=out)
-
-
 def spasgn(g: Graph, rows: DataFrame, cols: DataFrame, b: Graph) -> Graph:
     """SpAsgn: A(ri,ci) = B (SpParMat.cpp:2434-2573) — clear the
     (ri×ci) region with anti-joins, then union B remapped into global

@@ -104,17 +104,6 @@ def _fake_pixels(seeds: np.ndarray, npix: np.ndarray) -> tuple[np.ndarray, np.nd
     return pix, mask
 
 
-def _fake_decode(payload: bytes, w: int, h: int) -> np.ndarray:
-    """Single-image view of the stub decoder (same pixels as the
-    batched path).  Replace with a real codec (PIL.Image.open etc.)
-    when available — the surrounding plumbing is codec-agnostic."""
-    seed = np.array(
-        [int.from_bytes(hashlib.md5(payload).digest()[:8], "little")], dtype=np.uint64
-    )
-    pix, _ = _fake_pixels(seed, np.array([h * w]))
-    return pix[0].astype(np.uint8).reshape(h, w)
-
-
 def decode_and_featurize(media: DataFrame, feat_dim: int = 8) -> DataFrame:
     """decode → resize-to-metadata → mean-pool row-band features.
 

@@ -6,7 +6,10 @@ repeated.  A kernel supplies its starting vector and a ``step``; this
 module owns the loop.  The k-truss peel (algos/truss.py) runs on it
 too, with the surviving edges as its state, and so do the frontier
 kernels — the four BFS variants and the reachability/bowtie sweeps
-(algos/bfs.py, algos/bowtie.py) — with the visited table as theirs:
+(algos/bfs.py, algos/bowtie.py) — with the visited table as theirs,
+and connected components (FastSV and Awerbuch–Shiloach, algos/
+components.py), label propagation (algos/labelprop.py) and
+Bellman-Ford SSSP (algos/sssp.py) with their label or distance vector:
 
 * ONE driver action per superstep.  The step's new state row carries
   whatever the next step reads (PageRank's previous rank, HITS's other

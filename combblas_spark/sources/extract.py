@@ -86,22 +86,6 @@ def extract_hrefs(html: pd.Series) -> pd.Series:
     return s.map(_HREF_RE.findall)
 
 
-def extract_pages(pages: DataFrame) -> DataFrame:
-    """pages(url, warc_ts, html, …) → (url, warc_ts, text, hrefs, lang).
-
-    One pass over the html column producing both the text and out-link
-    columns; the scan reads only the columns used (column pruning
-    reaches the parquet/Iceberg source).
-    """
-    return pages.select(
-        "url",
-        "warc_ts",
-        "lang",
-        extract_text(F.col("html")).alias("text"),
-        extract_hrefs(F.col("html")).alias("hrefs"),
-    )
-
-
 def page_links(pages: DataFrame) -> DataFrame:
     """(src_url, dst_url) link pairs — the DistEdgeList-by-url stage.
 

@@ -41,13 +41,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(t)
-
-
 def link_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived customer→supplier multigraph collapsed to weighted edges.
 
@@ -70,30 +63,6 @@ def link_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def link_graph(spark: SparkSession, sf_dir: str, n_partitions: int = 32) -> Graph:
     e = link_graph_edges(spark, sf_dir).repartition(n_partitions, "src")
     return Graph(edges=e, n_partitions=n_partitions)
-
-
-def user_event_graph(spark: SparkSession, sf_dir: str, n_partitions: int = 32) -> Graph:
-    """Second derived graph: user→user edges from consecutive events —
-    u follows v when u and v produced the same event_type within the
-    events table (sampled deterministic pairing on event_id)."""
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    a = ev.alias("a")
-    b = ev.alias("b")
-    e = (
-        a.join(
-            b,
-            (F.col("a.event_type") == F.col("b.event_type"))
-            & (F.col("b.event_id") == F.col("a.event_id") + 1),
-        )
-        .select(
-            F.col("a.user_id").alias("src"),
-            F.col("b.user_id").alias("dst"),
-            F.lit(1.0).alias("w"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    return Graph(edges=e.repartition(n_partitions, "src"), n_partitions=n_partitions)
 
 
 def event_link_edges(

@@ -87,6 +87,34 @@ def test_vector_ops(spark):
     assert E.vec_count(x, lambda v: v >= 2.0) == 2
 
 
+def test_row_scaling_and_vector_primitives(spark, ga):
+    """DimApply, PruneI, vector Apply/ApplyInd/Find, vector Reduce,
+    MinElement, Uniq, Concatenate and Set/GetElement."""
+    from combblas_spark.operators.spmv import dim_apply
+
+    scale = spark.createDataFrame([(0, 10.0), (2, 0.5)], "v long, scale double")
+    assert edges_set(dim_apply(ga, scale)) == {
+        (0, 1, 20.0), (0, 2, 30.0), (2, 0, 2.5), (2, 2, 0.5)
+    }
+    assert edges_set(E.prune_ijv(ga, lambda i, j, w: i == j)) == {
+        t for t in A_TRIPLES if t[0] != t[1]
+    }
+
+    def rows(df):
+        return sorted((r["v"], r["val"]) for r in df.collect())
+
+    x = spark.createDataFrame([(0, 3.0), (1, 1.0), (2, 3.0), (3, 1.0)], "v long, val double")
+    assert rows(E.vec_apply(x, lambda v: v * 2)) == [(0, 6.0), (1, 2.0), (2, 6.0), (3, 2.0)]
+    assert rows(E.vec_apply_ind(x, lambda v, i: v + i)) == [(0, 3.0), (1, 2.0), (2, 5.0), (3, 4.0)]
+    assert rows(E.vec_find(x, lambda v: v > 2.0)) == [(0, 3.0), (2, 3.0)]
+    assert R.vec_reduce(x, F.max("val")) == 3.0
+    assert tuple(R.min_element(x)) == (1, 1.0)
+    assert rows(R.vec_uniq(x)) == [(0, 3.0), (1, 1.0)]
+    y = spark.createDataFrame([(0, 7.0)], "v long, val double")
+    assert rows(IX.vec_concatenate(spark, [x, y])) == rows(x) + [(4, 7.0)]
+    assert IX.get_element(IX.set_element(x, 1, 9.0, spark), 1) == 9.0
+
+
 # -- indexing ---------------------------------------------------------------
 
 def test_subsref_relabels(spark, ga):

@@ -174,6 +174,8 @@ def test_random_parent_bfs_differs_from_max_parent(spark):
     for seed in range(8):
         rows = {r["v"]: r["parent"] for r in random_parent_bfs(spark, g, 0, seed=seed).collect()}
         seen.add(rows[3])
+        if seen == {1, 2}:
+            break
     assert seen == {1, 2}
 
 
